@@ -8,6 +8,52 @@ import graft.queries.Registry
   * sorts are not pruned away by a count-only action).
   */
 object Bench {
+
+  /** One timed run. A run that throws is a failed sample, never a fast one. */
+  private[graft] final case class Sample[M](sec: Double, metrics: M, error: Option[Throwable])
+
+  /** Time `run` once, keeping what it threw. */
+  private[graft] def timeOnce(run: () => Unit): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val error = try { run(); None } catch { case e: Throwable => Some(e) }
+    ((System.nanoTime() - t0) / 1e9, error)
+  }
+
+  /** What [[robust]] recorded: the median and the times of the runs that
+    * succeeded (None when none did), their metrics, and the failures.
+    */
+  private[graft] final case class Robust[M](median: Option[Double], secs: Seq[Double],
+      metrics: Seq[M], failures: Seq[Throwable])
+
+  /** The robust-median policy: one unrecorded warm-up, then the median of 3
+    * runs — one run can absorb sandbox contention (round 3 recorded a 7×
+    * phantom regression); the median rejects one-sided outliers while still
+    * reflecting real latency. 2 more runs when the 3 spread past 3× (a
+    * contended box: rounds 3-4 both recorded >5× swings minutes after the
+    * test suite; a quiet rerun is flat) or their median is under a second
+    * (r11 variance gate: r10's q04 swung +45% median-to-median on
+    * byte-identical shuffle profiles — sub-second medians of 3 are dominated
+    * by scheduler jitter, and 5 samples reject it). Failed runs stay out of
+    * the median and of the spread test: a query that throws fast must not
+    * read as a fast query.
+    */
+  private[graft] def robust[M](timed: () => Sample[M]): Robust[M] = {
+    // one UNRECORDED warmup at the target SF: the sf0.001 pass warms
+    // codegen but not this SF's data/page-cache path — round 5's q47 runs
+    // [7.5, 3.8, 3.2] show the first cold run inflating the spread the
+    // outlier guard then has to reason about
+    timed()
+    def okSecs(xs: Seq[Sample[M]]) = xs.filter(_.error.isEmpty).map(_.sec).sorted
+    val first = (1 to 3).map(_ => timed())
+    val f = okSecs(first)
+    val all = if (f.nonEmpty && (f.max / f.min > 3.0 || f(f.size / 2) < 1.0))
+                first ++ (1 to 2).map(_ => timed())
+              else first
+    val ok = all.filter(_.error.isEmpty)
+    val secs = okSecs(all)
+    Robust(secs.lift(secs.size / 2), ok.map(_.sec), ok.map(_.metrics), all.flatMap(_.error))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -130,44 +176,28 @@ object Bench {
     // calibration AFTER warm-up (JIT-steady) and again after the suite:
     // the min of the two is the box-speed estimate for the whole window
     val calBefore = calibrate()
-    // report steady-state latency: median of 3 runs per query — a single
-    // run can absorb sandbox contention (round 3 recorded a 7× phantom
-    // regression); the median rejects one-sided outliers while still
-    // reflecting real latency. Outlier guard (round-3 advice): if the
-    // 3-run spread exceeds 3× the machine is contended (rounds 3-4 both
-    // recorded >5× swings minutes after the test suite; a quiet rerun is
-    // flat) — take 2 more runs and report the median of all 5. All raw
+    // report steady-state latency by the robust-median policy. All raw
     // runs ship in the JSON so noise stays visible, never silently folded.
-    def timed(run: () => Unit): (Double, RunMetrics) = {
+    def timed(run: () => Unit): Sample[RunMetrics] = {
       System.gc() // quiesce: don't bill query N for query N-1's garbage
       val before = metricsSnapshot()
-      val t0 = System.nanoTime()
-      try run() catch { case _: Throwable => () }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, error) = timeOnce(run)
       val after = metricsSnapshot()
-      (sec, RunMetrics(after.shuffleWrite - before.shuffleWrite,
-        after.shuffleRead - before.shuffleRead, after.spill - before.spill))
+      Sample(sec, RunMetrics(after.shuffleWrite - before.shuffleWrite,
+        after.shuffleRead - before.shuffleRead, after.spill - before.spill), error)
     }
-    def robust(run: () => Unit): (Double, Seq[Double], RunMetrics) = {
-      // one UNRECORDED warmup at the target SF: the sf0.001 pass above
-      // warms codegen but not this SF's data/page-cache path — round 5's
-      // q47 runs [7.5, 3.8, 3.2] show the first cold run inflating the
-      // spread the outlier guard then has to reason about
-      timed(run)
-      val first = (1 to 3).map(_ => timed(run))
-      // n=5 for SUB-SECOND queries as well as contended spreads (r11
-      // variance gate): r10's q04 swung +45% median-to-median on
-      // byte-identical shuffle profiles — sub-second medians of 3 are
-      // dominated by scheduler jitter, and 5 samples reject it
-      val all = if (first.map(_._1).max / first.map(_._1).min > 3.0 ||
-                    first.map(_._1).sorted.apply(1) < 1.0)
-                  first ++ (1 to 2).map(_ => timed(run))
-                else first
-      def medL(xs: Seq[Long]): Long = xs.sorted.apply(xs.size / 2)
-      (all.map(_._1).sorted.apply(all.size / 2), all.map(_._1),
-        RunMetrics(medL(all.map(_._2.shuffleWrite)), medL(all.map(_._2.shuffleRead)),
-          medL(all.map(_._2.spill))))
-    }
+    def medL(xs: Seq[Long]): Long = if (xs.isEmpty) 0L else xs.sorted.apply(xs.size / 2)
+    def medMetrics(ms: Seq[RunMetrics]): RunMetrics =
+      RunMetrics(medL(ms.map(_.shuffleWrite)), medL(ms.map(_.shuffleRead)), medL(ms.map(_.spill)))
+    // failed runs per segment, for the detail record
+    val failedRuns = scala.collection.mutable.LinkedHashMap[String, Int]()
+    def noteFailures(name: String, r: Robust[RunMetrics]): Unit =
+      r.failures.headOption.foreach { e =>
+        failedRuns(name) = r.failures.size
+        System.err.println(s"[bench] $name: ${r.failures.size} run(s) failed " +
+          s"(${e.getClass.getSimpleName}: ${e.getMessage})" +
+          (if (r.median.isEmpty) " — recorded as failed (-1)" else " — left out of the median"))
+      }
     // Per-query record: (name, median, raw runs, shuffle metrics, local
     // micro-cal = min(nearest probes), 1-min loadavg at completion).
     // local probe estimate = the MORE contended of the two adjacent probes
@@ -178,10 +208,12 @@ object Bench {
     probe()
     val results = headline.map { q =>
       val before = probes.last
-      val (med, times, metrics) = robust(() =>
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save())
+      val r = robust(() => timed(() =>
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()))
       probe()
-      (q.name, med, times, metrics, math.max(before, probes.last), probeLoads.last)
+      noteFailures(q.name, r)
+      (q.name, r.median.getOrElse(-1.0), r.secs, medMetrics(r.metrics),
+        math.max(before, probes.last), probeLoads.last)
     }
     // Streaming deliver segment at the reference's batch size: BASELINE.md
     // pins 2.1 s for transform+write of a 2.79 MB buffer (README.md:359);
@@ -224,20 +256,14 @@ object Bench {
         graft.sources.ShardedLog.fromEvents(events.limit(100)), s"$base/warmlog")
       deliverOnce(s"$base/warmlog", s"$base/warm")
       val ctr = new java.util.concurrent.atomic.AtomicInteger(0)
-      val runs = new scala.collection.mutable.ArrayBuffer[Double]
-      // robust() drives the run count + outlier extension; report the
-      // inner per-delivery times (identical modulo ns-call overhead)
-      val (_, _, dlvMetrics) =
-        robust(() => runs += deliverOnce(s"$base/log", s"$base/run${ctr.incrementAndGet()}"))
-      // timed() swallows per-run exceptions for the query benchmarks; a
-      // FAILED delivery must not silently shrink the median's sample —
+      val r = robust(() => timed(() => {
+        deliverOnce(s"$base/log", s"$base/run${ctr.incrementAndGet()}"); ()
+      }))
+      // a FAILED delivery must not silently shrink the median's sample —
       // surface it as the segment's failure sentinel instead
-      if (runs.size < ctr.get)
-        throw new RuntimeException(s"${ctr.get - runs.size} of ${ctr.get} deliver runs failed")
-      // robust()'s first call is its unrecorded warmup — the closure above
-      // records every invocation, so drop it here
-      val rec = runs.toSeq.drop(1)
-      (rec.sorted.apply(rec.size / 2), rec, dlvMetrics)
+      r.failures.headOption.foreach(e => throw new RuntimeException(
+        s"${r.failures.size} of ${r.failures.size + r.secs.size} deliver runs failed", e))
+      (r.median.get, r.secs, medMetrics(r.metrics))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] deliver segment failed: ${e.getMessage}")
       (-1.0, Seq(-1.0), RunMetrics(0, 0, 0))
@@ -266,10 +292,11 @@ object Bench {
         .toString + "/index"
       graft.operators.PqIndex.buildPqIvfIndex(corpus, idxDir, dim = 64,
         nlist = 16, m = 8, ksub = 64)
-      val (med, times, m) = robust(() =>
+      val r = robust(() => timed(() =>
         graft.operators.PqIndex.pqIvfQuery(queries, idxDir, k = 10, nprobe = 4)
-          .write.format("noop").mode("overwrite").save())
-      (med, times, m)
+          .write.format("noop").mode("overwrite").save()))
+      noteFailures("pq_ivf_serve", r)
+      (r.median.getOrElse(-1.0), r.secs, medMetrics(r.metrics))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] pq serve segment failed: ${e.getMessage}")
       (-1.0, Seq(-1.0), RunMetrics(0, 0, 0))
@@ -305,7 +332,10 @@ object Bench {
           val before = probes.last
           val run = () => q.run(spark, dir).write.format("noop").mode("overwrite").save()
           timed(run) // unrecorded warm run at the tier's own data
-          val ts = (1 to 3).map(_ => timed(run)._1)
+          val samples = (1 to 3).map(_ => timed(run))
+          samples.flatMap(_.error).headOption.foreach(e => throw new RuntimeException(
+            s"${q.name} failed at sf1", e))
+          val ts = samples.map(_.sec)
           probe()
           (q.name, ts.sorted.apply(ts.size / 2), ts, math.max(before, probes.last))
         }
@@ -437,7 +467,8 @@ object Bench {
     minRegressions.foreach(r => System.err.println(s"[bench] MIN REGRESSION $r"))
     contendedMins.foreach(r => System.err.println(
       s"[bench] CONTENDED MIN (deferred, load > ${loadCeiling.toInt}) $r"))
-    val total = all.map(_._2).sum
+    // a failed segment (-1) is reported as such, never summed as time
+    val total = all.map(_._2).filter(_ >= 0).sum
     // the headline micro-cal (and the value a baseline refresh records as
     // __microcal) is the run's MEDIAN probe: per-query ratios compare a
     // conservative local max against a typical baseline sample — a
@@ -475,7 +506,9 @@ object Bench {
         .mkString("{", ",", "}")
       s""","sf1_runs":$runs1,"sf1_microcal":$cal1"""
     }.getOrElse("")
-    val detail = s"""{"runs":$runs,"shuffle":$shuffleJson$sf1Detail,""" +
+    val failedJson = failedRuns.map { case (k, n) => "\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
+    val detail = s"""{"runs":$runs,"failed_runs":$failedJson,"shuffle":$shuffleJson$sf1Detail,""" +
       s""""shuffle_regressions":[${regressions.mkString(",")}],""" +
       s""""min_regressions":[${minRegressions.mkString(",")}],""" +
       s""""contended_mins":[${contendedMins.mkString(",")}],""" +

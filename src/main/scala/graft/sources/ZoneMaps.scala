@@ -30,8 +30,9 @@ import graft.streaming.FsOps
   *
   * Stats are harvested from parquet FOOTERS (exact, no data re-scan — the
   * bytes were just written and the footer already aggregates per-row-group
-  * min/max), persisted under `<manifestDir>/_zonemaps/zm-<batchId>.json`
-  * by the deliver sink, and folded into periodic snapshots like the
+  * min/max; the deliver sink's write tasks read their own files' footers
+  * and hand the stats back with the files), persisted under
+  * `<manifestDir>/_zonemaps/zm-<batchId>.json` by the deliver sink, and folded into periodic snapshots like the
   * manifest chain. Zone maps are ADVISORY: a file with no stats is always
   * kept, the driving predicate is always re-applied after the scan, and a
   * stale entry for a retired file is harmless (readers intersect with the
@@ -125,7 +126,7 @@ object ZoneMaps {
     * omitted are simply absent — absent means "never prune on this column
     * in this file", never an error.
     */
-  private[sources] def fileStats(conf: Configuration, file: String,
+  private[graft] def fileStats(conf: Configuration, file: String,
       cols: Seq[String]): Map[String, ColZone] = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new HPath(file), conf))
@@ -313,7 +314,6 @@ object ZoneMaps {
       zones: FileZones, compactEvery: Int): Unit = {
     val dir = new HPath(manifestDir, SidecarDir)
     val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
     val cadence = foldCadence(batchId, compactEvery)
     val pqTier = cadence &&
       resolveChain(fs, dir, upToExclusive = batchId)._1.exists(_._2 == SnapPq)

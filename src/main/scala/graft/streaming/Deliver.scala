@@ -11,11 +11,15 @@ import graft.codec.Envelope
   * micro-batch buffer → decode/enrich → Hive-partitioned parquet+snappy →
   * transactional visibility → portable manifest → error/DLQ + raw backup.
   *
-  * Exactly-once: the parquet `FileStreamSink` commits each batch into
-  * `_spark_metadata` (the native equivalent of the reference's
-  * data-then-manifest protocol, README.md:291-303) and the checkpoint
-  * stores source offsets (README.md:305-309) — at-least-once read +
-  * idempotent/transactional sink ⇒ end-to-end exactly-once.
+  * Exactly-once: the checkpoint stores source offsets (README.md:305-309)
+  * and the sink is idempotent per batch id, so an at-least-once read
+  * delivers end-to-end exactly-once. With no side output configured, the
+  * native parquet `FileStreamSink` commits each batch into
+  * `_spark_metadata`. Otherwise (manifest, DLQ, backup or compact) each
+  * batch runs [[deliverBatch]]'s protocol instead — the reference's
+  * data-then-manifest flush (README.md:291-303): data files staged and
+  * promoted under a write-ahead intent, then zone maps, the per-batch
+  * manifest and a commit marker. That path writes no `_spark_metadata`.
   */
 object Deliver {
 
@@ -59,7 +63,8 @@ object Deliver {
       // probe on a high-cardinality key spread across files has every
       // file's [min,max] straddling it, but readWhere(blooms = true)
       // disproves membership from the bloom bytes alone. Costs write CPU
-      // + up to parquet.bloom.filter.max.bytes per column chunk.
+      // + a filter sized for the flush's row count at 1 % false positives
+      // (~1.2 bytes a row, capped at parquet.bloom.filter.max.bytes).
       bloomFilterCols: Seq[String] = Nil,
       // the maintenance-lock seam (the Compact/Erase/Retention argument):
       // the sink's opportunistic parquet-tier manifest self-fold takes
@@ -111,18 +116,7 @@ object Deliver {
     * prefix (K4) and the raw backup (K5).
     */
   def start(records: DataFrame, payloadSchema: StructType, cfg: Config): StreamingQuery = {
-    val frame = transform(records, payloadSchema, cfg.clock, cfg.partitionByProcessingTime)
-    val baseCols = Seq(
-      col("partition_key"), col("sequence_number"),
-      col("env.data.*"), col("env.metadata.op").as("op"),
-      col("processed_at"), col("year"), col("month"), col("day"), col("hour"),
-      col("__ok"), col("data").as("__raw"))
-    val flat =
-      if (cfg.routeByTable)
-        frame.select(substring_index(col("partition_key"), "-", 1).as("table") +: baseCols: _*)
-      else frame.select(baseCols: _*)
-    val partCols =
-      (if (cfg.routeByTable) Seq("table") else Seq.empty) ++ Seq("year", "month", "day", "hour")
+    val flat = flatten(records, payloadSchema, cfg)
 
     // compact=true needs the foreachBatch path too: the native
     // FileStreamSink branch has no per-batch coalesce, so B2's
@@ -136,7 +130,7 @@ object Deliver {
         .option("path", cfg.lakeDir)
         .option("compression", "snappy")
         .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-        .partitionBy(partCols: _*)
+        .partitionBy(partCols(cfg): _*)
         .option("checkpointLocation", cfg.checkpointDir)
         .trigger(cfg.trigger)
         .start()
@@ -150,6 +144,26 @@ object Deliver {
         .start()
     }
   }
+
+  /** The frame [[deliverBatch]] receives per batch: the lake's columns,
+    * the partition columns, plus `__ok` (decoded) and `__raw` (the wire
+    * payload, for the DLQ and backup).
+    */
+  private[graft] def flatten(records: DataFrame, payloadSchema: StructType,
+      cfg: Config): DataFrame = {
+    val frame = transform(records, payloadSchema, cfg.clock, cfg.partitionByProcessingTime)
+    val baseCols = Seq(
+      col("partition_key"), col("sequence_number"),
+      col("env.data.*"), col("env.metadata.op").as("op"),
+      col("processed_at"), col("year"), col("month"), col("day"), col("hour"),
+      col("__ok"), col("data").as("__raw"))
+    if (cfg.routeByTable)
+      frame.select(substring_index(col("partition_key"), "-", 1).as("table") +: baseCols: _*)
+    else frame.select(baseCols: _*)
+  }
+
+  private def partCols(cfg: Config): Seq[String] =
+    (if (cfg.routeByTable) Seq("table") else Seq.empty) ++ Seq("year", "month", "day", "hour")
 
   /** Source-seam variant (README.md:46-53's source contract): the stream
     * backend is a CONFIG, not a call-site rewrite. Offline:
@@ -165,10 +179,11 @@ object Deliver {
     start(graft.sources.StreamIngest.readStream(spark, source), payloadSchema, cfg)
 
   /** One buffer flush (README.md:282-303): stage this batch's data files
-    * under a batch-scoped prefix, promote them into the lake, then —
-    * strictly after — the per-batch manifest listing exactly this flush's
-    * files (the reference's manifests are per-flush too), then the batch
-    * commit marker. Every step is O(this batch): no directory walk of the
+    * under a batch-scoped prefix (the DLQ and backup are written
+    * alongside), promote them into the lake, then — strictly after — the
+    * per-batch manifest listing exactly this flush's files (the
+    * reference's manifests are per-flush too), then the batch commit
+    * marker. Every step is O(this batch): no directory walk of the
     * lake, no cumulative manifest rewrite — the two O(history)
     * scale-killers of a long-running 60 s-flush stream.
     *
@@ -207,6 +222,9 @@ object Deliver {
           s"stream runs from '${cfg.checkpointDir}': a reset checkpoint reuses batch ids " +
           "and silently skipping would drop the new records behind them — deliver into a " +
           "fresh lake, or clear _commits/ after verifying the lake matches the log")
+    // a crash between the marker and the intent's removal leaves the
+    // intent behind; the replay that finds the marker removes it
+    clearIntent(fs, new HPath(cfg.lakeDir), batchId)
     true
   }
 
@@ -219,11 +237,9 @@ object Deliver {
     p.getFileSystem(lakeFs.getConf).makeQualified(p).toString
   }
 
-  private def writeMarker(fs: FileSystem, marker: HPath, cfg: Config): Unit = {
-    fs.mkdirs(marker.getParent)
-    val out = fs.create(marker, true)
-    try out.write(qualifiedCkpt(cfg.checkpointDir, fs).getBytes("UTF-8")) finally out.close()
-  }
+  private def writeMarker(hconf: org.apache.hadoop.conf.Configuration, fs: FileSystem,
+      marker: HPath, cfg: Config): Unit =
+    FsOps.atomicWrite(hconf, fs, marker, qualifiedCkpt(cfg.checkpointDir, fs).getBytes("UTF-8"))
 
   private[graft] def deliverBatch(batch: DataFrame, batchId: Long, cfg: Config): Unit = {
     val spark = batch.sparkSession
@@ -235,77 +251,59 @@ object Deliver {
 
     // lake write, DLQ write, and raw backup all consume this batch —
     // persist so the source scan + decode run once, and processed_at
-    // cannot drift between the destinations of one batch
+    // cannot drift between the destinations of one batch. The count
+    // builds that cache with one task per source partition, so the decode
+    // runs in parallel before compact's single-task write reads it; and
+    // the batch's row count bounds every file's distinct keys, which sizes
+    // the bloom filters. (An RDD count is one job; `Dataset.count` plans an
+    // aggregate, which adaptive execution runs as two.)
     batch.persist()
     try {
+    val rows = batch.rdd.count()
     val okRaw = batch.where(col("__ok")).drop("__ok", "__raw")
     val okAll = guardErased(okRaw, batchId, cfg)
     // B2 batch compaction: the reference's buffer flush emits ONE object per
     // flush (1000 records → 1 part file); coalesce(1) reproduces that.
     val ok = if (cfg.compact) okAll.coalesce(1) else okAll
-    val partCols =
-      (if (cfg.routeByTable) Seq("table") else Seq.empty) ++ Seq("year", "month", "day", "hour")
 
-    // 1. data files (PUT #1) → batch-scoped staging prefix; overwrite mode
-    // discards a crashed attempt's stage on replay
-    val stage = fs.makeQualified(new HPath(lake, f"_staging/batch-$batchId%010d"))
-    withInt64Timestamps(ok.sparkSession) {
-      cfg.bloomFilterCols.foldLeft(
-        ok.write.mode("overwrite")
-          .option("compression", "snappy")
-          .option("maxRecordsPerFile", cfg.maxRecordsPerFile)) { (w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-        .partitionBy(partCols: _*)
-        .parquet(stage.toString)
-    }
-
-    // 2. promote: move each staged parquet into its lake partition dir.
-    val added = promoteStage(fs, hconf, lake, stage, batchId, cfg)
-
-    // 3. zone maps (advisory, before the manifest so a published manifest's
-    // files always have their stats visible), then the manifest (PUT #2,
-    // only after data success — README.md:419-430): incremental per-batch
-    // listing; every Nth batch folds the chain into a snapshot so
-    // reader/compaction work stays O(batch + chain/N)
-    cfg.manifestDir.foreach { mdir =>
-      writeZoneMaps(hconf, mdir, batchId, added, cfg)
-      writeManifest(hconf, mdir, batchId, added, cfg.manifestCompactEvery, cfg.lakeDir, cfg.lock)
-    }
-
-    // 4. failed records → errors/ prefix (README.md:426). Batch-scoped
-    // subdir + overwrite ⇒ a mid-batch replay REPLACES the attempt instead
-    // of appending a duplicate (idempotent per batch). The erased-key probe
+    // 1. data files (PUT #1) → batch-scoped staging prefix, cleared first so
+    // a replay never promotes a crashed attempt's files; alongside, the
+    // side outputs. Failed records → errors/ prefix (README.md:426); raw
+    // backup (S3BackupMode=AllData, README.md:605). The erased-key probe
     // (zero cost with no tombstones) keeps a replay from resurrecting a
-    // GDPR-erased subject HERE: the DLQ rows are undecodable but still
+    // GDPR-erased subject in either: the DLQ rows are undecodable but still
     // carry the subject's partition key, which is how they get erased
-    // (Erase.LakeTarget keys override) and how the guard recognizes them.
-    cfg.errorDir.foreach { edir =>
-      ErasedKeys.dropErased(
+    // (Erase.LakeTarget keys override) and how the guard recognizes them;
+    // the backup is a byte-copy of every record, and erasure that skipped
+    // it would not be erasure.
+    val stage = fs.makeQualified(new HPath(lake, f"_staging/batch-$batchId%010d"))
+    FsOps.deleteOrThrow(fs, stage, recursive = true)
+    val sides = cfg.errorDir.toSeq.map { edir =>
+      SideOutput(ErasedKeys.dropErased(
         batch.where(!col("__ok"))
           .select(col("partition_key"), col("sequence_number"), col("__raw").as("raw"),
             col("processed_at"), col("year"), col("month"), col("day"), col("hour")),
-        edir, "partition_key", "partition_key", "DLQ write")
-        .write.mode("overwrite").partitionBy("year", "month", "day", "hour")
-        .parquet(s"$edir/batch=$batchId")
-    }
-
-    // 5. raw backup (S3BackupMode=AllData, README.md:605) — same
-    // idempotence, same replay guard (the backup is a byte-copy of every
-    // record; erasure that skipped it would not be erasure)
-    cfg.backupDir.foreach { bdir =>
-      ErasedKeys.dropErased(
+        edir, "partition_key", "partition_key", "DLQ write"),
+        s"$edir/batch=$batchId", Seq("year", "month", "day", "hour"))
+    } ++ cfg.backupDir.toSeq.map { bdir =>
+      SideOutput(ErasedKeys.dropErased(
         batch.select(col("partition_key"), col("sequence_number"), col("__raw").as("raw")),
-        bdir, "partition_key", "partition_key", "raw backup write")
-        .write.mode("overwrite").parquet(s"$bdir/batch=$batchId")
+        bdir, "partition_key", "partition_key", "raw backup write"),
+        s"$bdir/batch=$batchId", Nil)
+    }
+    val staged = withSideOutputs(spark, hconf, sides) {
+      stageWrite(ok, stage, partCols(cfg), rows, cfg)
     }
 
-    // 6. commit marker — the batch is fully delivered; replays become no-ops
-    writeMarker(fs, marker, cfg)
+    // 2-3. promote, zone maps, manifest
+    publish(fs, hconf, lake, stage, staged, batchId, cfg)
+
+    // 4. commit marker — the batch is fully delivered; replays become no-ops
+    writeMarker(hconf, fs, marker, cfg)
     clearIntent(fs, lake, batchId)
     } finally { batch.unpersist(); () }
 
-    // 7. tombstone-sidecar self-fold at the manifest cadence: the
+    // 5. tombstone-sidecar self-fold at the manifest cadence: the
     // `_erased` listings must stay O(1) in erase-request count, like the
     // manifest chain and zone sidecars — on EVERY store this sink probes
     // (the lake's guard, and the backup/DLQ write guards). AFTER the
@@ -318,6 +316,82 @@ object Deliver {
         ErasedKeys.foldIfQuiet(spark, cfg.lakeDir, k, cfg.lock))
       (cfg.errorDir.toSeq ++ cfg.backupDir.toSeq).foreach(d =>
         ErasedKeys.foldIfQuiet(spark, d, "partition_key", cfg.lock))
+    }
+  }
+
+  /** Steps 2-3 of a flush: promote the staged files into their lake
+    * partition dirs ([[promoteStage]]), then zone maps (advisory, before
+    * the manifest so a published manifest's files always have their stats
+    * visible), then the manifest (PUT #2, only after data success —
+    * README.md:419-430): an incremental per-batch listing; every Nth batch
+    * folds the chain into a snapshot so reader/compaction work stays
+    * O(batch + chain/N).
+    */
+  private def publish(fs: FileSystem, hconf: org.apache.hadoop.conf.Configuration, lake: HPath,
+      stage: HPath, staged: Seq[DirectCommitProtocol.Staged], batchId: Long, cfg: Config): Unit = {
+    val added = promoteStage(fs, hconf, lake, stage, staged, batchId, cfg)
+    cfg.manifestDir.foreach { mdir =>
+      writeZoneMaps(hconf, mdir, batchId, added, cfg)
+      writeManifest(hconf, mdir, batchId, added.map(_.file), cfg.manifestCompactEvery,
+        cfg.lakeDir, cfg.lock)
+    }
+  }
+
+  /** Write one slice of the batch into the flat stage through
+    * [[DirectCommitProtocol]]: one task per output partition of `df`, each
+    * returning its files and, when zone maps are on, their footer stats.
+    * Blooms are sized for `rows` distinct keys, the batch's row count, at
+    * parquet's default 1 % false-positive rate — a fixed-size default
+    * filter would spend ~1 MB per file on a flush of a few thousand rows.
+    */
+  private def stageWrite(df: DataFrame, stage: HPath, partitionBy: Seq[String], rows: Long,
+      cfg: Config): Seq[DirectCommitProtocol.Staged] = {
+    val w = cfg.bloomFilterCols.foldLeft(
+      df.write.mode("append")
+        .option("compression", "snappy")
+        .option("maxRecordsPerFile", cfg.maxRecordsPerFile)) { (w, c) =>
+      w.option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.expected.ndv#$c", math.max(rows, 1L))
+    }.partitionBy(partitionBy: _*)
+    val zoneCols = if (cfg.manifestDir.isDefined) cfg.zoneMapCols else Nil
+    DirectCommitProtocol.run(stage, flat = true, zoneCols)(w.parquet(stage.toString))
+  }
+
+  /** A batch-scoped side output (DLQ, raw backup): `df` goes to `dir`. */
+  private final case class SideOutput(df: DataFrame, dir: String, partitionBy: Seq[String])
+
+  /** Run `stage` (the lake's stage writes) with the session conf of
+    * Deliver's writes set, and write `sides` alongside it: each side dir is
+    * cleared first, here, so a replay replaces a crashed attempt's files;
+    * then every side output is written in one task, in place, through
+    * [[DirectCommitProtocol]], on a second thread — compact's single-task
+    * stage write leaves the other cores idle. The thread is created here,
+    * so it inherits this one's Spark local properties (the stream's job
+    * group). Both finish before the conf is restored; a stage failure wins
+    * over a side failure. Side files get the lake's INT64 timestamps too.
+    */
+  private def withSideOutputs[T](spark: SparkSession, hconf: org.apache.hadoop.conf.Configuration,
+      sides: Seq[SideOutput])(stage: => T): T = {
+    val outs = sides.map { o =>
+      val p = new HPath(o.dir)
+      val fs = p.getFileSystem(hconf)
+      val out = fs.makeQualified(p)
+      FsOps.deleteOrThrow(fs, out, recursive = true)
+      (o, out)
+    }
+    withSessionConf(spark, Int64Timestamps, DirectCommitProtocol.SessionConf) {
+      @volatile var failure: Option[Throwable] = None
+      val side = new Thread(() =>
+        try outs.foreach { case (o, out) =>
+          DirectCommitProtocol.run(out, flat = false, Nil) {
+            o.df.coalesce(1).write.mode("append").partitionBy(o.partitionBy: _*)
+              .parquet(out.toString)
+          }
+        } catch { case e: Throwable => failure = Some(e) }, "graft-deliver-side-outputs")
+      side.start()
+      val r = try stage finally side.join()
+      failure.foreach(e => throw e)
+      r
     }
   }
 
@@ -344,10 +418,12 @@ object Deliver {
   private def clearIntent(fs: FileSystem, lake: HPath, batchId: Long): Unit =
     FsOps.deleteOrThrow(fs, intentPath(lake, batchId), recursive = false)
 
-  /** Move every staged parquet into its mirrored lake path. The staged
-    * listing is the write's own output — O(batch files), never a walk of
-    * the lake — and a failed rename throws before the manifest could list
-    * a file that does not exist.
+  /** Move every staged parquet into its lake partition dir. The staged
+    * files are the ones the write's tasks committed ([[DirectCommitProtocol]]
+    * returns them), so promote neither lists the stage nor walks the lake,
+    * and a failed rename throws before the manifest could list a file that
+    * does not exist. Returns the promoted files, their `file` now the
+    * qualified lake url, sorted by url.
     *
     * Replay idempotence for DIRECTORY readers: before any promote, the full
     * destination list is recorded in a write-ahead intent file; a replay of
@@ -363,7 +439,8 @@ object Deliver {
     * names a deleted file.
     */
   private def promoteStage(fs: FileSystem, hconf: org.apache.hadoop.conf.Configuration,
-      lake: HPath, stage: HPath, batchId: Long, cfg: Config): Seq[String] = {
+      lake: HPath, stage: HPath, staged: Seq[DirectCommitProtocol.Staged], batchId: Long,
+      cfg: Config): Seq[DirectCommitProtocol.Staged] = {
     // 0. crashed-attempt cleanup: remove files a previous attempt of THIS
     // batch already promoted (the intent file is the exact list), after
     // retracting any manifest that lists them
@@ -375,32 +452,21 @@ object Deliver {
       FsOps.readString(fs, intent).split("\n").filter(_.nonEmpty)
         .foreach(p => FsOps.deleteOrThrow(fs, new HPath(p), recursive = false))
     }
-    val staged = {
-      val it = fs.listFiles(stage, true)
-      val buf = Vector.newBuilder[HPath]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) buf += f
-      }
-      buf.result()
+    val moves = staged.map { s =>
+      val src = new HPath(s.file)
+      (s, src, fs.makeQualified(new HPath(new HPath(lake, s.partDir), src.getName)))
     }
-    val stagePrefix = stage.toString + "/"
-    val dests = staged.map { f =>
-      (f, new HPath(lake, f.toString.stripPrefix(stagePrefix)))
+    if (moves.nonEmpty) {
+      // 1. intent (write-ahead): the destination list is durable BEFORE the
+      // first rename, so a crash mid-promote is recoverable
+      FsOps.atomicWrite(hconf, fs, intent,
+        moves.map(_._3.toString).mkString("\n").getBytes("UTF-8"))
+      // 2. promote: one mkdirs per partition dir, one rename per file
+      moves.map(_._3.getParent).distinct.foreach(FsOps.mkdirs(fs, _))
+      moves.foreach { case (_, src, dest) => FsOps.renameOrThrow(fs, src, dest) }
     }
-    // 1. intent (write-ahead): the destination list is durable BEFORE the
-    // first rename, so a crash mid-promote is recoverable
-    fs.mkdirs(intent.getParent)
-    FsOps.atomicWrite(hconf, fs, intent,
-      dests.map(d => fs.makeQualified(d._2).toString).mkString("\n").getBytes("UTF-8"))
-    // 2. promote
-    val added = dests.map { case (src, dest) =>
-      fs.mkdirs(dest.getParent)
-      FsOps.renameOrThrow(fs, src, dest)
-      fs.makeQualified(dest).toString
-    }.sorted
     FsOps.deleteOrThrow(fs, stage, recursive = true)
-    added
+    moves.map { case (s, _, dest) => s.copy(file = dest.toString) }.sortBy(_.file)
   }
 
   /** Start the MULTI-TABLE delivery query (C1 dynamic schema registry):
@@ -428,10 +494,12 @@ object Deliver {
 
   /** One registry flush: per registered table, decode that table's slice
     * with its own schema and stage it under `table=<t>/year=…`; then the
-    * shared promote → manifest → DLQ → marker protocol of [[deliverBatch]].
+    * shared protocol of [[deliverBatch]] (DLQ alongside the stage writes,
+    * promote, manifest, marker).
     * Work is O(batch × registered-tables-present): the per-table slices are
     * pruned from a single cached pass over the batch, and empty slices skip
-    * the write entirely.
+    * the write entirely. All tables' files share one flat stage (their
+    * names are unique); each carries its `table=<t>/` partition dir.
     */
   private[streaming] def deliverRegistryBatch(batch: DataFrame, batchId: Long,
       cfg: Config): Unit = {
@@ -446,18 +514,20 @@ object Deliver {
       .withColumn("table", substring_index(col("partition_key"), "-", 1))
       .persist()
     try {
-      // which registered tables actually appear in this batch — avoids one
+      // which registered tables actually appear in this batch, with each
+      // one's row count (it sizes the table's bloom filters) — avoids one
       // no-op Spark job per registered-but-absent table (a 1000-table
       // registry must not cost 1000 jobs per flush)
-      // restrict to REGISTERED tables before the distinct-collect: the
+      // restrict to REGISTERED tables before the grouped collect: the
       // table prefix is raw user data, and a feed of pathological keys
       // must not materialize millions of driver strings — unknown tables
       // take the DLQ path below without ever being enumerated here
       val present = tabled.select("table")
         .where(col("table").isin(cfg.schemas.keys.toSeq: _*))
-        .distinct()
-        .collect().map(_.getString(0)).toSet // O(#registered tables)
+        .groupBy("table").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // O(#registered tables)
       val stage = fs.makeQualified(new HPath(lake, f"_staging/batch-$batchId%010d"))
+      FsOps.deleteOrThrow(fs, stage, recursive = true)
       val rawCols = Seq(col("table"), col("partition_key"), col("sequence_number"),
         col("data").as("raw"))
 
@@ -465,7 +535,7 @@ object Deliver {
       // lake write takes where(__ok), the DLQ takes where(!__ok) of the
       // SAME frame, so "landed ∪ DLQ = batch" holds by construction (no
       // second decode, no independently-maintained predicate to drift)
-      val decodeFailed = cfg.schemas.toSeq.collect { case (t, tableSchema) if present(t) =>
+      val slices = cfg.schemas.toSeq.collect { case (t, tableSchema) if present.contains(t) =>
         val frame = transform(tabled.where(col("table") === t), tableSchema,
           cfg.clock, cfg.partitionByProcessingTime)
         val ok = frame.where(col("__ok")).select(
@@ -482,47 +552,33 @@ object Deliver {
             cfg.erasedGuardFail, s"deliver[$t]")
           case None => ok
         }
-        val okC = if (cfg.compact) okG.coalesce(1) else okG
-        withInt64Timestamps(okC.sparkSession) {
-          cfg.bloomFilterCols.foldLeft(
-            okC.write.mode("overwrite")
-              .option("compression", "snappy")
-              .option("maxRecordsPerFile", cfg.maxRecordsPerFile)) { (w, c) =>
-            w.option(s"parquet.bloom.filter.enabled#$c", "true")
-          }
-            .partitionBy("year", "month", "day", "hour")
-            .parquet(new HPath(stage, s"table=$t").toString)
-        }
-        frame.where(!col("__ok"))
-          .select(rawCols :+ lit("decode_failed").as("reason"): _*)
-      }
-
-      val added = if (fs.exists(stage)) promoteStage(fs, hconf, lake, stage, batchId, cfg)
-        else Seq.empty
-      cfg.manifestDir.foreach { mdir =>
-        writeZoneMaps(hconf, mdir, batchId, added, cfg)
-        writeManifest(hconf, mdir, batchId, added, cfg.manifestCompactEvery, cfg.lakeDir, cfg.lock)
+        (t, if (cfg.compact) okG.coalesce(1) else okG,
+          frame.where(!col("__ok")).select(rawCols :+ lit("decode_failed").as("reason"): _*))
       }
 
       // DLQ: unknown tables + per-table decode failures, one idempotent
       // batch-scoped write (replay replaces, never appends). The unknown
       // filter is null-safe: a NULL partition_key derives a NULL table,
       // which must route here — not silently match no destination.
-      cfg.errorDir.foreach { edir =>
-        val known = cfg.schemas.keySet.toSeq
-        val unknown = tabled
-          .where(col("table").isNull || !col("table").isInCollection(known))
-          .select(rawCols :+ lit("unknown_table").as("reason"): _*)
-        (unknown +: decodeFailed).reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(s"$edir/batch=$batchId")
+      val unknown = tabled
+        .where(col("table").isNull || !col("table").isInCollection(cfg.schemas.keySet.toSeq))
+        .select(rawCols :+ lit("unknown_table").as("reason"): _*)
+      val sides = cfg.errorDir.toSeq.map { edir =>
+        SideOutput((unknown +: slices.map(_._3)).reduce(_ unionByName _),
+          s"$edir/batch=$batchId", Nil)
+      } ++ cfg.backupDir.toSeq.map { bdir =>
+        SideOutput(tabled.select(col("partition_key"), col("sequence_number"),
+          col("data").as("raw")), s"$bdir/batch=$batchId", Nil)
       }
-
-      cfg.backupDir.foreach { bdir =>
-        tabled.select(col("partition_key"), col("sequence_number"), col("data").as("raw"))
-          .write.mode("overwrite").parquet(s"$bdir/batch=$batchId")
+      val staged = withSideOutputs(spark, hconf, sides) {
+        slices.flatMap { case (t, ok, _) =>
+          stageWrite(ok, stage, Seq("year", "month", "day", "hour"), present(t), cfg)
+            .map(f => f.copy(partDir = s"table=$t/${f.partDir}"))
+        }
       }
+      publish(fs, hconf, lake, stage, staged, batchId, cfg)
 
-      writeMarker(fs, marker, cfg)
+      writeMarker(hconf, fs, marker, cfg)
       clearIntent(fs, lake, batchId)
     } finally tabled.unpersist()
   }
@@ -540,70 +596,90 @@ object Deliver {
     * re-sets the job conf key from the session SQLConf, so the session
     * toggle is the only control point — hence the lock. Lake writes of
     * one process serialize across this boundary; the toggle covers only
-    * the write call, and per-stream writes are serial anyway.
+    * the write call, and per-stream writes are serial anyway. The same
+    * lock scopes the commit-protocol class of Deliver's own writes
+    * ([[DirectCommitProtocol.SessionConf]]), which is likewise read only
+    * from the session conf.
     */
-  private val int64TsLock = new Object
   private[graft] def withInt64Timestamps[T](spark: SparkSession)(body: => T): T =
-    int64TsLock.synchronized {
-      val key = "spark.sql.parquet.outputTimestampType"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "TIMESTAMP_MICROS")
+    withSessionConf(spark, Int64Timestamps)(body)
+
+  private val Int64Timestamps = "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+  private val sessionConfLock = new Object
+
+  /** Set `confs` on the session for the duration of `body` and restore the
+    * previous values after, under one lock for every such writer.
+    */
+  private def withSessionConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T =
+    sessionConfLock.synchronized {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+      finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
 
-  /** Harvest footer stats for this flush's files into the `_zonemaps`
-    * sidecar (no-op when zoneMapCols is empty). Idempotent per batchId like
-    * the manifest; snapshot cadence mirrors manifestCompactEvery.
+  /** Write this flush's footer stats into the `_zonemaps` sidecar (no-op
+    * when zoneMapCols is empty). The stats were read by the tasks that
+    * wrote the files and came back with them ([[DirectCommitProtocol]]), so
+    * the driver opens no footer here. Idempotent per batchId like the
+    * manifest; snapshot cadence mirrors manifestCompactEvery.
     */
   private def writeZoneMaps(hconf: org.apache.hadoop.conf.Configuration,
-      mdir: String, batchId: Long, added: Seq[String], cfg: Config): Unit =
+      mdir: String, batchId: Long, added: Seq[DirectCommitProtocol.Staged],
+      cfg: Config): Unit =
     if (cfg.zoneMapCols.nonEmpty) {
-      // the sidecar is ADVISORY: a harvest failure (pathological
-      // timestamp overflowing micros normalization, corrupt footer) must
-      // degrade to no-pruning-for-this-batch, never fail the data flush
+      // the sidecar is ADVISORY: a failed write or fold must degrade to
+      // no-pruning-for-this-batch, never fail the data flush (an
+      // unreadable footer already degraded its own file in the task)
       try {
-        val zones = graft.sources.ZoneMaps.fromFooters(hconf, added, cfg.zoneMapCols)
-        graft.sources.ZoneMaps.write(hconf, mdir, batchId, zones, cfg.manifestCompactEvery)
+        graft.sources.ZoneMaps.write(hconf, mdir, batchId,
+          added.map(f => f.file -> f.zones).toMap, cfg.manifestCompactEvery)
         // parquet-tier lakes SELF-MAINTAIN: at the cadence the JSON chain
         // would have folded, fold the parquet snapshot distributively
         // (write() emits only incrementals once the tier is parquet —
         // without this, overlay incrementals accumulate until external
         // maintenance). Idempotent per batchId like the incremental.
         if (graft.sources.ZoneMaps.foldCadence(batchId, cfg.manifestCompactEvery) &&
-            graft.sources.ZoneMaps.isParquetTier(hconf, mdir)) {
-          SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-            case Some(s) =>
-              // under the maintenance try-lock, like the manifest
-              // self-fold: an unlocked zone fold racing Compact's locked
-              // zone repair swaps the snapshot the repair's job is
-              // mid-reading — the repair dies FILE_NOT_EXIST (found by the
-              // double-graduated soak). Busy → skip; zones are advisory
-              // and the lock holder folds the chain itself.
-              val zLake = new HPath(cfg.lakeDir)
-              if (cfg.lock.tryWithLock(zLake.getFileSystem(hconf), zLake,
-                  Compact.DefaultLeaseMs) {
-                graft.sources.ZoneMaps.foldToParquet(s, mdir,
-                  snapshotId = Some(batchId))
-              }.isEmpty)
-                System.err.println(s"[graft] batch-$batchId sidecar self-fold " +
-                  "skipped: a maintenance writer holds the lake lock")
-            case None =>
-              System.err.println("[graft] WARNING: no active SparkSession " +
-                s"for the batch-$batchId parquet-tier sidecar fold — " +
-                "incrementals accumulate until ZoneMaps.foldToParquet runs")
+            graft.sources.ZoneMaps.isParquetTier(hconf, mdir))
+          selfFold("sidecar", batchId, cfg.lakeDir, cfg.lock, hconf) { s =>
+            graft.sources.ZoneMaps.foldToParquet(s, mdir, snapshotId = Some(batchId))
           }
-        }
       } catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] WARNING: zone-map harvest failed for " +
+          System.err.println(s"[graft] WARNING: zone-map sidecar write failed for " +
             s"batch $batchId (${e.getMessage}) — files delivered fine, " +
             "readers just won't prune them; ManifestReader.refreshZoneMaps " +
             "rebuilds the sidecar")
       }
+    }
+
+  /** A parquet-tier chain's self-fold at cadence, under the maintenance
+    * try-lock: an unlocked fold racing a LOCKED Compact/Retention/Erase
+    * fold or zone repair could replace its result blind to its edits —
+    * resurrecting just-retired files in the manifest, or swapping the zone
+    * snapshot a repair's job is mid-reading (it died FILE_NOT_EXIST in the
+    * double-graduated soak). A busy lock, no session or a failed fold skips
+    * it, always safely: the chain is intact and its incrementals accumulate
+    * until the next fold (or the lock holder's own).
+    */
+  private def selfFold(what: String, batchId: Long, lakeDir: String, lock: LockProvider,
+      hconf: org.apache.hadoop.conf.Configuration)(fold: SparkSession => Unit): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
+      case Some(s) =>
+        val lake = new HPath(lakeDir)
+        try {
+          if (lock.tryWithLock(lake.getFileSystem(hconf), lake, Compact.DefaultLeaseMs)(
+              fold(s)).isEmpty)
+            System.err.println(s"[graft] batch-$batchId $what self-fold skipped: a " +
+              "maintenance writer holds the lake lock; incrementals accumulate until the next fold")
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] WARNING: batch-$batchId parquet-tier $what fold " +
+            s"failed (${e.getMessage}) — the chain is intact; incrementals accumulate " +
+            "until the next fold")
+        }
+      case None =>
+        System.err.println(s"[graft] WARNING: no active SparkSession for the " +
+          s"batch-$batchId parquet-tier $what fold — incrementals accumulate until the next fold")
     }
 
   /** Write manifest-<id>.json (incremental: exactly `added`) or, when id is
@@ -625,7 +701,6 @@ object Deliver {
       lakeDir: String, lock: LockProvider = FsLeaseLock): Unit = {
     val dir = new HPath(mdir)
     val fs = dir.getFileSystem(hconf)
-    fs.mkdirs(dir)
     val cadence = compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
     // PARQUET tier: once a manifest-*.snap.pq leads the chain (a lake
     // graduated via ManifestReader.foldManifestToParquet), JSON folding
@@ -644,7 +719,18 @@ object Deliver {
       // absent mid-chain, and a failed rename throws instead of returning false
       FsOps.atomicWrite(hconf, fs, new HPath(dir, n),
         ManifestChain.render(urls, Some(base)).getBytes("UTF-8"))
-    if (!snapshot) put(name, added)
+    // the incremental for this batch. A JSON snapshot of the same id — a
+    // crashed attempt's, when this replay could not take the lock to fold —
+    // would shadow it (the chain resolves a snapshot over an incremental of
+    // its own id) and keep naming the files the replay just deleted, so it
+    // goes once the incremental is in place
+    def putIncremental(): Unit = {
+      put(f"manifest-$batchId%010d.json", added)
+      if (cadence)
+        FsOps.deleteOrThrow(fs, new HPath(dir, f"manifest-$batchId%010d.snap.json"),
+          recursive = false)
+    }
+    if (!snapshot) putIncremental()
     else {
       // Snapshot folds are a read-fold-write of the chain, which can race
       // a CONCURRENT maintenance fold (Compact/Retention under their
@@ -702,15 +788,14 @@ object Deliver {
           attempts += 1
           if (stable) graduated = ManifestChain.hasParquetSnapshot(fs, dir)
         }
-        if (!stable || graduated) put(f"manifest-$batchId%010d.json", added)
+        if (!stable || graduated) putIncremental()
         else {
           put(name, urls)
           if (ManifestChain.hasParquetSnapshot(fs, dir)) {
             // graduation slipped between the pre-install check and the put:
             // retract (our batchId is ours alone) and fall back to an
             // incremental — always safe on any tier
-            FsOps.deleteOrThrow(fs, new HPath(dir, name), recursive = false)
-            put(f"manifest-$batchId%010d.json", added)
+            putIncremental()
           }
         }
       }
@@ -718,45 +803,15 @@ object Deliver {
         System.err.println(s"[graft] batch-$batchId manifest snapshot fold " +
           "skipped: a maintenance writer holds the lake lock — wrote an " +
           "incremental instead (folds at the next cadence)")
-        put(f"manifest-$batchId%010d.json", added)
+        putIncremental()
       }
     }
     // parquet-tier self-fold at cadence — AFTER the incremental above is
-    // durable (a failed fold leaves the chain intact and incrementals
-    // accumulate until the next cadence or external maintenance). Same
-    // session-resolution shape as the zone sidecar's self-fold.
-    if (pqTier) {
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
-        case Some(s) =>
-          try {
-            // under the maintenance try-lock: a self-fold racing a LOCKED
-            // retire/promote fold (Compact/Retention/Erase) could replace
-            // it blind to its edits — resurrecting just-retired files in
-            // the manifest. Busy lock → skip; always safe (incrementals
-            // accumulate until the next cadence, or the maintenance pass
-            // itself folds them).
-            val lakeRootPath = new HPath(lakeDir)
-            val lakeFs = lakeRootPath.getFileSystem(hconf)
-            if (lock.tryWithLock(lakeFs, lakeRootPath,
-                Compact.DefaultLeaseMs) {
-              graft.sources.ManifestReader.foldManifestToParquet(s, mdir,
-                snapshotId = Some(batchId))
-            }.isEmpty)
-              System.err.println(s"[graft] batch-$batchId manifest self-fold " +
-                "skipped: a maintenance writer holds the lake lock; " +
-                "incrementals accumulate until the next fold")
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[graft] WARNING: batch-$batchId parquet-tier " +
-              s"manifest fold failed (${e.getMessage}) — the chain is intact; " +
-              "incrementals accumulate until the next fold")
-          }
-        case None =>
-          System.err.println("[graft] WARNING: no active SparkSession for " +
-            s"the batch-$batchId parquet-tier manifest fold — incrementals " +
-            "accumulate until ManifestReader.foldManifestToParquet runs")
+    // durable, so a failed fold never loses the batch's urls
+    if (pqTier)
+      selfFold("manifest", batchId, lakeDir, lock, hconf) { s =>
+        graft.sources.ManifestReader.foldManifestToParquet(s, mdir, snapshotId = Some(batchId))
       }
-    }
   }
 }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.audit.AuditListener
-import graft.sources.ShardedLog
+import graft.sources.{ManifestReader, ShardedLog, ZoneMaps}
 import graft.streaming.{Alert, Deliver}
 
 /** End-to-end delivery-path invariants (SURVEY.md §5): exactly-once under
@@ -150,15 +150,8 @@ class DeliverSpec extends SparkSuite {
     val cfg = Deliver.Config(s"$base/lake", s"$base/ck",
       trigger = Trigger.AvailableNow(), clock = clock)
     // deliver batch 0 directly (the foreachBatch body), as the stream would
-    def flatBatch = {
-      val frame = Deliver.transform(
-        spark.read.schema(ShardedLog.schema).parquet(s"$base/log"), payloadSchema, clock)
-      frame.select(col("partition_key"), col("sequence_number"), col("env.data.*"),
-        col("env.metadata.op").as("op"), col("processed_at"),
-        col("year"), col("month"), col("day"), col("hour"),
-        col("env").isNotNull.and(col("env.data").isNotNull).as("__ok"),
-        col("data").as("__raw"))
-    }
+    def flatBatch = Deliver.flatten(
+      spark.read.schema(ShardedLog.schema).parquet(s"$base/log"), payloadSchema, cfg)
     Deliver.deliverBatch(flatBatch, 0L, cfg)
     assert(spark.read.parquet(s"$base/lake").count() == 50)
     import scala.jdk.CollectionConverters._
@@ -200,6 +193,96 @@ class DeliverSpec extends SparkSuite {
     val q3 = Deliver.start(ShardedLog.readStream(spark, s"$base/log"), payloadSchema, cfg1)
     q3.awaitTermination()
     assert(spark.read.parquet(s"$base/lake").count() == 20)
+  }
+
+  /** `good` plus undecodable copies of its first `bad` records. */
+  private def withCorrupt(good: org.apache.spark.sql.DataFrame, bad: Int) =
+    good.unionByName(good.limit(bad).withColumn("data", lit("%%%not-base64%%%"))
+      .withColumn("sequence_number", concat(lit("bad-"), col("sequence_number"))))
+
+  test("one small flush: direct-write commit, no stage listing, no driver footer open") {
+    val base = tmpDir("graft-count-")
+    // processing-time partitions: the flush lands in one hour folder, so it
+    // writes one lake file and one DLQ file
+    val cfg = Deliver.Config(s"$base/lake", s"$base/ck", errorDir = Some(s"$base/dlq"),
+      manifestDir = Some(s"$base/manifest"), compact = true, partitionByProcessingTime = true,
+      zoneMapCols = Seq("id", "ts"), bloomFilterCols = Seq("id"), clock = clock)
+    // a local relation: the source itself runs no job
+    val recs = withCorrupt(ShardedLog.fromEvents(events.limit(40)), 3)
+    val batch = Deliver.flatten(
+      spark.createDataFrame(java.util.Arrays.asList(recs.collect(): _*), recs.schema),
+      payloadSchema, cfg)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(e.stageInfos.map(_.name).mkString("+")); ()
+      }
+    }
+    def drain() = org.apache.spark.graftbridge.ListenerBridge.flushListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val (_, c) =
+      try CountingFs.counting(spark) {
+        drain(); jobs.clear()
+        Deliver.deliverBatch(batch, 0L, cfg)
+        drain()
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$base/lake").count() == 40)
+    assert(spark.read.parquet(s"$base/dlq").count() == 3)
+    // creates: the lake file, the DLQ file, and four control files (intent,
+    // zone sidecar, manifest, marker) — no _temporary tree, no _SUCCESS
+    assert(c.creates == 6, c)
+    // renames: one promote, and the four control files' installs
+    assert(c.renames == 5, c)
+    // mkdirs: the lake partition dir the file is promoted into
+    assert(c.mkdirs == 1, c)
+    // the stage's files come back in the tasks' commit messages, with their
+    // zone stats: nothing lists the stage, the driver opens no footer
+    assert(c.stageListings == 0, c)
+    assert(c.driverParquetOpens == 0, c)
+    // jobs: the parallel materialize (count), the lake write, the DLQ write
+    assert(jobs.size == 3, jobs)
+    // the counter is live: a driver-side footer harvest registers
+    val files = ManifestReader.latestManifestFiles(spark, s"$base/manifest")
+    assert(files.size == 1)
+    val (zones, ctl) = CountingFs.counting(spark) {
+      ZoneMaps.fromFooters(spark.sessionState.newHadoopConf(), files, Seq("id"))
+    }
+    assert(ctl.driverParquetOpens == 1, ctl)
+    // and the sidecar the tasks' stats produced matches that harvest
+    assert(ZoneMaps.load(spark.sessionState.newHadoopConf(), s"$base/manifest")(files.head)
+      .keySet == Set("id", "ts"))
+    assert(zones(files.head)("id") == ZoneMaps.load(spark.sessionState.newHadoopConf(),
+      s"$base/manifest")(files.head)("id"))
+  }
+
+  test("bloom filters are sized to the flush: small files, blooms still prune") {
+    val base = tmpDir("graft-bloom-")
+    val cfg = Deliver.Config(s"$base/lake", s"$base/ck", manifestDir = Some(s"$base/manifest"),
+      compact = true, partitionByProcessingTime = true,
+      zoneMapCols = Seq("event_id"), bloomFilterCols = Seq("event_id"), clock = clock)
+    // two flushes of 500 rows: even event ids, then odd ones
+    val all = graft.queries.Registry.tbl(spark, sfDir, "events")
+    Seq(0, 1).foreach { i =>
+      Deliver.deliverBatch(Deliver.flatten(
+        ShardedLog.fromEvents(all.where($"event_id" % 2 === i)), payloadSchema, cfg), i.toLong, cfg)
+    }
+    val files = ManifestReader.latestManifestFiles(spark, s"$base/manifest")
+    assert(files.size == 2) // one hour folder, one file per flush
+    // a default-sized bloom alone is 1 MB
+    val fs = new org.apache.hadoop.fs.Path(files.head).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    files.foreach { f =>
+      val len = fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
+      assert(len < 64 * 1024, s"$f is $len bytes")
+    }
+    // an even id lies inside both files' [min, max]: zone maps keep both,
+    // the odd file's bloom drops it
+    val k = 500L
+    assert(ManifestReader.pruneStats(spark, s"$base/manifest", $"event_id" === k) == ((2, 2)))
+    assert(ManifestReader.pruneStats(spark, s"$base/manifest", $"event_id" === k,
+      blooms = true) == ((1, 2)))
+    assert(ManifestReader.readWhere(spark, s"$base/manifest", $"event_id" === k, blooms = true)
+      .count() == 1)
   }
 
   test("per-key ordering survives the shard layout (S2: same key ⇒ same shard)") {
