@@ -238,15 +238,13 @@ object Bench {
           StructField("value", DoubleType), StructField("ts", TimestampType),
           StructField("event_id", LongType)))),
         StructField("metadata", StructType(Seq(StructField("op", StringType))))))
-      def deliverOnce(log: String, out: String): Double = {
-        val t0 = System.nanoTime()
+      def deliverOnce(log: String, out: String): Unit = {
         val q = graft.streaming.Deliver.start(
           graft.sources.ShardedLog.readStream(spark, log), payloadSchema,
           graft.streaming.Deliver.Config(s"$out/lake", s"$out/ck", compact = true,
             partitionByProcessingTime = true, // reference semantics: one hour folder per flush
             trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()))
         q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
       }
       // warm the streaming machinery (the managed-service baseline is
       // steady-state), then the same robust-median policy as the query
@@ -256,9 +254,8 @@ object Bench {
         graft.sources.ShardedLog.fromEvents(events.limit(100)), s"$base/warmlog")
       deliverOnce(s"$base/warmlog", s"$base/warm")
       val ctr = new java.util.concurrent.atomic.AtomicInteger(0)
-      val r = robust(() => timed(() => {
-        deliverOnce(s"$base/log", s"$base/run${ctr.incrementAndGet()}"); ()
-      }))
+      val r = robust(() => timed(() =>
+        deliverOnce(s"$base/log", s"$base/run${ctr.incrementAndGet()}")))
       // a FAILED delivery must not silently shrink the median's sample —
       // surface it as the segment's failure sentinel instead
       r.failures.headOption.foreach(e => throw new RuntimeException(
