@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.StructType
   * LRU (64 dirs): centroid tables are ≤ nlist×dim doubles (≈25 MB at
   * nlist 4096 / dim 768), so the bound caps worst-case driver memory for
   * many-shard serving processes while keeping every realistic working set
-  * resident.
+  * resident. Hits and misses are counted per tag ([[hitsMisses]]), so a
+  * spec or a report can tell whether a metadata cache is hitting.
   */
 private[graft] object IndexMeta {
   private val maxEntries = 64
@@ -33,6 +34,22 @@ private[graft] object IndexMeta {
           e: JMap.Entry[String, (String, AnyRef)]): Boolean =
         size() > maxEntries
     })
+
+  private val counts =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[java.util.concurrent.atomic.AtomicLong]]
+
+  /** Count one lookup of a cache under `tag`: also used by caches that
+    * validate their entries by other means (the per-file membership cache).
+    */
+  def count(tag: String, hit: Boolean): Unit = {
+    counts.computeIfAbsent(tag, _ => Array.fill(2)(new java.util.concurrent.atomic.AtomicLong))(
+      if (hit) 0 else 1).incrementAndGet()
+    ()
+  }
+
+  /** (hits, misses) under `tag` since the process started. */
+  def hitsMisses(tag: String): (Long, Long) =
+    Option(counts.get(tag)).fold((0L, 0L))(c => (c(0).get, c(1).get))
 
   private def signature(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -65,6 +82,7 @@ private[graft] object IndexMeta {
     val key = s"$tag@$dir"
     val sig = signature(spark, dir)
     val hit = cache.get(key)
+    count(tag, hit != null && hit._1 == sig)
     if (hit != null && hit._1 == sig) hit._2.asInstanceOf[A]
     else {
       val v = load

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.streaming.ManifestChain
 
 /** S7 manifest-driven scan (README.md:291-303, 451-456): read ONLY the files
@@ -18,65 +19,63 @@ import graft.streaming.ManifestChain
   */
 object ManifestReader {
 
-  /** Resolve the manifest chain and return the union of listed data files.
-    *
-    * JSON tier: all chain manifests are parsed in ONE Spark json read (a
-    * single job regardless of chain length); I/O goes through Hadoop
-    * FileSystem, so remote manifest dirs resolve against the right store.
-    *
-    * PARQUET tier (a `manifest-<id>.snap.pq` snapshot leads the chain —
-    * see [[foldManifestToParquet]]): the snapshot is the url TABLE; this
-    * driver-side listing (which `spark.read.parquet(files)` inherently
-    * needs) is resolved once per CHAIN CHANGE and cached by directory
-    * signature via [[graft.operators.IndexMeta]], instead of re-collected
-    * and re-sorted on every read — at ~10⁶ urls the per-read rebuild was
-    * the next driver cliff (r12 verdict ask #2). Distributed consumers
-    * (the zone-prune semi-join) read the table itself and never collect.
+  /** Resolve the manifest chain and return the union of listed data files
+    * (path-normalized, sorted — the same spelling on both tiers).
     */
-  def latestManifestFiles(spark: SparkSession, manifestDir: String): Seq[String] = {
-    val dir = new HPath(manifestDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestChain.resolveTiered(fs, dir) match {
-      case (Some((_, ManifestChain.SnapPq, _)), _) =>
-        resolvedUrlsBasePq(spark, manifestDir)._1
-      case _ =>
-        val chain = ManifestChain.chainFiles(fs, dir)
-        if (chain.isEmpty) Seq.empty
-        else spark.read.option("multiLine", true)
-          .schema("entries array<struct<mandatory boolean, url string>>")
-          .json(chain.map(_.toString): _*)
-          .select(explode(col("entries")).as("e"))
-          .select(col("e.url")).distinct().collect().map(_.getString(0))
-          // Path-normalize like the parquet tier (which round-trips urls
-          // through HPath): the public API's url spelling must be
-          // TIER-INVARIANT — without this, every url "changes" spelling
-          // (file:/// → file:/) the moment a lake graduates, breaking any
-          // external caller keying on exact strings
-          .map(normUrl).toSeq.distinct.sorted
+  def latestManifestFiles(spark: SparkSession, manifestDir: String): Seq[String] =
+    chain(spark, manifestDir).urls
+
+  /** A resolved manifest chain: its listed urls, the scan basePath, and —
+    * read once per chain, on first use — the lake schema.
+    */
+  private final class Chain(val urls: Seq[String], recordedBase: Option[String]) {
+    /** The scan basePath: the writer-recorded lake root when the chain
+      * agrees on one (exact, no guessing — an unpartitioned lake whose
+      * root dir is named `run=7` is otherwise indistinguishable from a
+      * partition dir), else the longest common parent of the listed files
+      * with trailing `name=value` partition segments peeled (the foreign-
+      * manifest heuristic; peeling from the END keeps an ancestor that
+      * happens to contain '=' out of partition discovery). One
+      * implementation for every read path.
+      */
+    lazy val base: String = recordedBase.getOrElse {
+      val common = urls
+        .map(_.split('/').dropRight(1).toSeq) // parent dir segments
+        .reduce((a, b) => a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1))
+      common.reverse.dropWhile(seg =>
+          seg.contains('=') && !seg.startsWith("=")).reverse
+        .mkString("/")
+    }
+    @volatile private var schemaMemo: StructType = null
+    /** The lake schema from the first listed file's footer and path. */
+    def schema(spark: SparkSession): StructType = {
+      if (schemaMemo == null) schemaMemo = ZoneMaps.probeSchema(spark, base, urls.head)
+      schemaMemo
     }
   }
 
-  /** Parquet-tier (urls, recorded base): snapshot table ∪ since-snapshot
-    * incrementals (parsed driver-side — small by cadence), cached by the
-    * manifest dir's listing signature so the collect+sort happens once per
-    * CHAIN CHANGE, not per read. cachedIf keeps only listings a driver
-    * can comfortably pin; beyond the cap each read reloads (and a lake
-    * that big should be partition-pruned before its full listing matters).
+  /** The chain, cached by the manifest dir's listing signature through
+    * [[graft.operators.IndexMeta]], so the manifests are read once per
+    * CHAIN CHANGE, not per read. Both tiers parse their JSON pieces on the
+    * driver (small: a JSON chain is folded every `manifestCompactEvery`
+    * flushes); a PARQUET tier (a `manifest-<id>.snap.pq` snapshot leads
+    * the chain — see [[foldManifestToParquet]]) adds its snapshot table,
+    * collected by one Spark job. Distributed consumers (the zone-prune
+    * semi-join) read that table itself and never collect.
     */
-  private def resolvedUrlsBasePq(spark: SparkSession,
-      manifestDir: String): (Seq[String], Option[String]) = {
-    // a fold swapping the snapshot mid-read kills the collect
-    // (FILE_NOT_EXIST); unlike the advisory zones, a manifest read cannot
-    // degrade — RETRY against the freshly-resolved chain (the new snapshot
-    // is in place by the time the old one's files are gone). The retry is
-    // scoped to the NOT-FOUND family only: a deterministic failure (corrupt
-    // snapshot schema, permission denied) must surface on the first read,
-    // not after two futile replays.
+  private def chain(spark: SparkSession, manifestDir: String): Chain = {
+    // a fold swapping the snapshot mid-read kills the read (FILE_NOT_EXIST);
+    // unlike the advisory zones, a manifest read cannot degrade — RETRY
+    // against the freshly-resolved chain (the new snapshot is in place by
+    // the time the old one's files are gone). The retry is scoped to the
+    // NOT-FOUND family only: a deterministic failure (corrupt snapshot
+    // schema, permission denied) must surface on the first read, not after
+    // two futile replays.
     var last: Throwable = null
     var attempt = 0
     while (attempt < 3) {
       attempt += 1
-      try return resolvedUrlsBasePqOnce(spark, manifestDir)
+      try return chainOnce(spark, manifestDir)
       catch {
         case scala.util.control.NonFatal(e) if isNotFound(e) =>
           mfRetries.incrementAndGet()
@@ -115,67 +114,41 @@ object ManifestReader {
     false
   }
 
-  private def resolvedUrlsBasePqOnce(spark: SparkSession,
-      manifestDir: String): (Seq[String], Option[String]) = {
+  private def chainOnce(spark: SparkSession, manifestDir: String): Chain = {
     val dir = new HPath(manifestDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     graft.operators.IndexMeta.cachedIf(spark, manifestDir, tag = "mf-urls") {
       // re-resolve INSIDE the load: the cached value must describe the
       // listing the signature was sampled from
-      ManifestChain.resolveTiered(fs, dir) match {
-        case (Some((_, ManifestChain.SnapPq, p)), incs) =>
-          val rows = spark.read.schema(MfPqSchema).parquet(p.toString).collect()
-          val incTxt = incs.map(e => graft.streaming.FsOps.readString(fs, e._2))
-          val urls = (rows.map(_.getString(0)).toSeq ++
-            incTxt.flatMap(ManifestChain.parseUrls).map(normUrl)).distinct.sorted
-          val bases = (rows.flatMap(r => Option(r.getString(1))).toSeq ++
-            incTxt.flatMap(ManifestChain.parseBasePath).map(normUrl)).distinct
-          (urls, if (bases.size == 1) Some(bases.head) else None):
-            (Seq[String], Option[String])
-        case _ => (Seq.empty[String], None): (Seq[String], Option[String])
-      }
+      val (snap, incs) = ManifestChain.resolveTiered(fs, dir)
+      val rows = snap.collect { case (_, ManifestChain.SnapPq, p) =>
+        spark.read.schema(MfPqSchema).parquet(p.toString).collect().toSeq
+      }.getOrElse(Seq.empty)
+      val txt = (snap.collect { case (_, ManifestChain.SnapJson, p) => p }.toSeq ++
+        incs.map(_._2)).map(graft.streaming.FsOps.readString(fs, _))
+      val urls = (rows.map(_.getString(0)) ++
+        txt.flatMap(ManifestChain.parseUrls).map(normUrl)).distinct.sorted
+      // the lake root recorded by the writers, when all that record one
+      // agree (disagreement means mixed producers: fall back to the heuristic)
+      val bases = (rows.flatMap(r => Option(r.getString(1))) ++
+        txt.flatMap(ManifestChain.parseBasePath).map(normUrl)).distinct
+      new Chain(urls, if (bases.size == 1) Some(bases.head) else None)
       // cache bound is BYTES, not url count (r13 advice): at ~100-200 B per
       // pinned String, 2M urls is 200-400 MB of driver heap PER manifest
       // dir, and several registered lakes multiply it. Estimate each url at
       // 2 B/char + ~48 B String/array header overhead and keep listings
       // under ~64 MB; a bigger lake's listing reloads per read (and should
       // be consumed through the distributed manifest TABLE, not this list).
-    }(v => v._1.foldLeft(0L)((a, u) => a + 2L * u.length + 48L) <= (64L << 20))
+    }(c => c.urls.foldLeft(0L)((a, u) => a + 2L * u.length + 48L) <= (64L << 20))
   }
 
   /** Scan exactly the manifest-listed files (duplicate-proof, torn-write-proof). */
   def read(spark: SparkSession, manifestDir: String): DataFrame = {
-    val files = latestManifestFiles(spark, manifestDir)
-    require(files.nonEmpty, s"no manifest in $manifestDir")
-    // basePath preserves the Hive partition columns of the listed files.
-    // Graft-written manifests RECORD the writer's lake root — exact, no
-    // guessing (an unpartitioned lake whose root dir is named `run=7` is
-    // otherwise indistinguishable from a partition dir). Foreign
-    // Redshift-style manifests carry no basePath → fall back to the path
-    // heuristic: longest common parent dir, then peel trailing `name=value`
-    // segments. Peeling from the END of the common prefix keeps an
-    // ancestor directory that happens to contain '=' out of partition
-    // discovery; unpartitioned manifests peel nothing.
-    spark.read.option("basePath", resolveBasePath(spark, manifestDir, files))
-      .parquet(files: _*)
+    val c = chain(spark, manifestDir)
+    require(c.urls.nonEmpty, s"no manifest in $manifestDir")
+    // basePath preserves the Hive partition columns of the listed files
+    spark.read.option("basePath", c.base).parquet(c.urls: _*)
   }
-
-  /** The scan basePath: the writer-recorded lake root when the chain
-    * agrees on one, else the longest common parent of the listed files
-    * with trailing `name=value` partition segments peeled (the foreign-
-    * manifest heuristic) — ONE implementation for every read path, so a
-    * foreign manifest resolves identically through read/readWhere/asTable.
-    */
-  private def resolveBasePath(spark: SparkSession, manifestDir: String,
-      files: Seq[String]): String =
-    recordedBasePath(spark, manifestDir).getOrElse {
-      val common = files
-        .map(_.split('/').dropRight(1).toSeq) // parent dir segments
-        .reduce((a, b) => a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1))
-      common.reverse.dropWhile(seg =>
-          seg.contains('=') && !seg.startsWith("=")).reverse
-        .mkString("/")
-    }
 
   /** Manifest scan with file-level zone-map pruning: resolve the visible
     * file set, drop every file whose persisted `_zonemaps` stats PROVE it
@@ -185,41 +158,41 @@ object ManifestReader {
     * At 100 TB this is the difference between opening every file so
     * parquet row-group stats can reject it and never scheduling the file
     * at all: the decision reads a manifest-sized sidecar, no data I/O.
+    * The scan reads with the chain's cached schema, so it infers none.
     */
   def readWhere(spark: SparkSession, manifestDir: String,
       filter: org.apache.spark.sql.Column, blooms: Boolean = false): DataFrame = {
-    val (kept, files, base) = pruned(spark, manifestDir, filter, blooms)
-    val read = if (kept.nonEmpty) kept else files.take(1)
-    spark.read.option("basePath", base).parquet(read: _*).where(filter)
+    val (kept, c) = pruned(spark, manifestDir, filter, blooms)
+    val read = if (kept.nonEmpty) kept else c.urls.take(1)
+    spark.read.schema(c.schema(spark)).option("basePath", c.base)
+      .parquet(read: _*).where(filter)
   }
 
   /** (files kept, files total) under zone-map pruning — effectiveness
-    * observability for tests and ops. `blooms` adds the parquet-bloom
+    * observability for tests and ops. `blooms` adds the membership
     * equality stage (see [[ZoneMaps.bloomPrune]]).
     */
   def pruneStats(spark: SparkSession, manifestDir: String,
       filter: org.apache.spark.sql.Column, blooms: Boolean = false): (Int, Int) = {
-    val (kept, files, _) = pruned(spark, manifestDir, filter, blooms)
-    (kept.size, files.size)
+    val (kept, c) = pruned(spark, manifestDir, filter, blooms)
+    (kept.size, c.urls.size)
   }
 
   private def pruned(spark: SparkSession, manifestDir: String,
-      filter: org.apache.spark.sql.Column,
-      blooms: Boolean = false): (Seq[String], Seq[String], String) = {
-    val files = latestManifestFiles(spark, manifestDir)
-    require(files.nonEmpty, s"no manifest in $manifestDir")
-    val base = resolveBasePath(spark, manifestDir, files)
+      filter: org.apache.spark.sql.Column, blooms: Boolean): (Seq[String], Chain) = {
+    val c = chain(spark, manifestDir)
+    require(c.urls.nonEmpty, s"no manifest in $manifestDir")
     // tier-aware: a parquet-snapshot sidecar is pruned distributively (the
     // driver never materializes the zones map), a JSON chain through the
     // driver map — one decision point for readWhere/pruneStats/asTable
-    val kept = ZoneMaps.resolvedPredicate(spark, base, files.head, filter) match {
-      case None => files
+    val kept = ZoneMaps.resolvedPredicate(spark, c.schema(spark), filter) match {
+      case None => c.urls
       case Some(pred) =>
-        val zoneKept = ZoneMaps.pruneResolved(spark, manifestDir, pred, files)
+        val zoneKept = ZoneMaps.pruneResolved(spark, manifestDir, pred, c.urls)
         if (!blooms) zoneKept
         else ZoneMaps.bloomPruneScaled(spark, zoneKept, pred)._1
     }
-    (kept, files, base)
+    (kept, c)
   }
 
   /** The manifest lake as a pruning TABLE: a DataFrame whose every scan —
@@ -255,9 +228,8 @@ object ManifestReader {
     // (a harmless extra refresh) — sampled after, it would be consumed
     // unseen and the view would miss it until the NEXT manifest change
     val sig0 = sig()
-    val files = latestManifestFiles(spark, manifestDir)
-    require(files.nonEmpty, s"no manifest in $manifestDir")
-    val base = resolveBasePath(spark, manifestDir, files)
+    val c = chain(spark, manifestDir)
+    require(c.urls.nonEmpty, s"no manifest in $manifestDir")
     // zones resolve PER SCAN through ZoneMaps.pruneResolved (signature-
     // cached, tier-aware): a flush after registration is pruned with its
     // own fresh sidecar stats, not a registration-time snapshot
@@ -275,7 +247,7 @@ object ManifestReader {
     // when the manifest directory's listing changes — a view over a
     // delivering lake sees post-registration flushes without
     // re-registration. The chain signature is one FS listing per scan;
-    // the (Spark-job) manifest parse re-runs only on change, and the
+    // the manifest parse re-runs only on change, and the
     // change is consumed via the COMMIT callback only after the new index
     // installs — a failed parse/build/layout-check retries next scan
     // instead of silently pinning the stale file set.
@@ -291,8 +263,8 @@ object ManifestReader {
         }
       }
     org.apache.spark.sql.graftbridge.ZoneMapFileIndex.table(spark,
-      files.map(new org.apache.hadoop.fs.Path(_)),
-      new org.apache.hadoop.fs.Path(base), prune, Some(resolve))
+      c.urls.map(new org.apache.hadoop.fs.Path(_)),
+      new org.apache.hadoop.fs.Path(c.base), prune, Some(resolve))
   }
 
   /** Rebuild the zone-map sidecar from the CURRENT visible file set's
@@ -328,24 +300,6 @@ object ManifestReader {
         zones, compactEvery = 1) // force a snapshot fold
     }
     files.size
-  }
-
-  /** The lake root recorded by the manifest writer, when all chain
-    * manifests that record one agree (path-normalized). Disagreement means
-    * mixed producers — fall back to the heuristic rather than guess.
-    */
-  private def recordedBasePath(spark: SparkSession, manifestDir: String): Option[String] = {
-    val dir = new HPath(manifestDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestChain.resolveTiered(fs, dir) match {
-      case (Some((_, ManifestChain.SnapPq, _)), _) =>
-        resolvedUrlsBasePq(spark, manifestDir)._2
-      case _ =>
-        val bases = ManifestChain.chainFiles(fs, dir)
-          .flatMap(p => ManifestChain.parseBasePath(graft.streaming.FsOps.readString(fs, p)))
-          .map(b => new HPath(b).toString).distinct
-        if (bases.size == 1) Some(bases.head) else None
-    }
   }
 
   // ------------------------------------------------ parquet manifest tier

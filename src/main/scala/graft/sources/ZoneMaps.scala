@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.util.Base64
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.{Callable, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import scala.collection.JavaConverters._
 import scala.collection.mutable
@@ -10,7 +10,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.column.page.DictionaryPageReadStore
+import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -57,38 +60,44 @@ object ZoneMaps {
 
   /** Exact per-file stats from parquet footers, restricted to `cols`
     * (Nil = every supported leaf column). Footer reads are metadata-only
-    * (a few KB each) and run on a bounded driver-side pool — same cost
+    * (a few KB each) and run on the shared driver [[probePool]] — same cost
     * class as the file listing that preceded them.
     */
   def fromFooters(conf: Configuration, files: Seq[String],
-      cols: Seq[String] = Nil): FileZones = {
-    if (files.isEmpty) return Map.empty
-    val pool = Executors.newFixedThreadPool(math.min(files.size, 16))
-    try {
-      val futs = files.map { f =>
-        pool.submit(new Callable[(String, Map[String, ColZone])] {
-          // one unreadable/corrupt footer degrades THAT file to
-          // no-stats-never-pruned (the advisory contract and the bloom
-          // stage's posture) instead of aborting the whole harvest —
-          // fromFooters feeds query-time paths (scanWhere, pruneStats,
-          // refreshZoneMaps, Compact's zone repair) where a single bad
-          // foreign file must not kill the scan
-          def call() = (f,
-            try fileStats(conf, f, cols)
-            catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[graft] WARNING: zone-map harvest skipped " +
-                s"unreadable footer $f (${e.getMessage}) — the file is kept " +
-                "unpruned")
-              Map.empty[String, ColZone]
-            })
+      cols: Seq[String] = Nil): FileZones =
+    onProbePool(files) { f =>
+      // one unreadable/corrupt footer degrades THAT file to
+      // no-stats-never-pruned (the advisory contract and the membership
+      // stage's posture) instead of aborting the whole harvest —
+      // fromFooters feeds query-time paths (scanWhere, pruneStats,
+      // refreshZoneMaps, Compact's zone repair) where a single bad
+      // foreign file must not kill the scan
+      (f, try fileStats(conf, f, cols)
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] WARNING: zone-map harvest skipped " +
+            s"unreadable footer $f (${e.getMessage}) — the file is kept " +
+            "unpruned")
+          Map.empty[String, ColZone]
         })
-      }
-      futs.map(_.get()).toMap
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(10, TimeUnit.SECONDS)
-    }
+    }.toMap
+
+  /** The driver pool every footer, bloom and dictionary probe shares: 16
+    * daemon threads, started on demand and retired after a minute idle, so
+    * a probe call neither builds nor tears down threads. Tasks on it never
+    * submit to it, so callers cannot deadlock it.
+    */
+  private lazy val probePool = {
+    val p = new ThreadPoolExecutor(16, 16, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graft-footer-probe"); t.setDaemon(true); t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
   }
+
+  /** `f` over `xs` on [[probePool]], results in input order. */
+  private def onProbePool[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    xs.map(x => probePool.submit(new Callable[B] { def call() = f(x) })).map(_.get())
 
   /** Cluster-scale [[fromFooters]]: above `distributeOver` files the
     * footer reads run as a Spark job (each file's harvest is independent;
@@ -99,25 +108,32 @@ object ZoneMaps {
     */
   def fromFootersScaled(spark: SparkSession, files: Seq[String],
       cols: Seq[String] = Nil, distributeOver: Int = 2048): FileZones = {
-    val conf = spark.sessionState.newHadoopConf()
-    if (files.size < distributeOver) return fromFooters(conf, files, cols)
-    val serConf = new SerializableHadoopConf(conf)
-    val localCols = cols
-    val slices = math.min(files.size / 64 + 1,
-      math.max(spark.sparkContext.defaultParallelism * 4, 32))
-    val res = spark.sparkContext.parallelize(files, slices)
-      .map { f =>
-        try (f, fileStats(serConf.value, f, localCols), true)
-        catch { case scala.util.control.NonFatal(_) =>
-          (f, Map.empty[String, ColZone], false) // keep-unpruned degradation
-        }
-      }.collect()
+    if (files.size < distributeOver)
+      return fromFooters(spark.sessionState.newHadoopConf(), files, cols)
+    val res = onCluster(spark, files) { (conf, f) =>
+      try (f, fileStats(conf, f, cols), true)
+      catch { case scala.util.control.NonFatal(_) =>
+        (f, Map.empty[String, ColZone], false) // keep-unpruned degradation
+      }
+    }
     val skipped = res.collect { case (f, _, false) => f }
     if (skipped.nonEmpty)
       System.err.println(s"[graft] WARNING: zone-map harvest skipped " +
         s"${skipped.size} unreadable footer(s) (first: ${skipped.head}) — " +
         "those files are kept unpruned")
     res.map(r => r._1 -> r._2).toMap
+  }
+
+  /** `f` over `files` as one Spark job: the cluster-scale path of the
+    * footer and membership probes (each file independent, one small answer
+    * per file back to the driver).
+    */
+  private def onCluster[B: scala.reflect.ClassTag](spark: SparkSession, files: Seq[String])(
+      f: (Configuration, String) => B): Seq[B] = {
+    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+    val slices = math.min(files.size / 64 + 1,
+      math.max(spark.sparkContext.defaultParallelism * 4, 32))
+    spark.sparkContext.parallelize(files, slices).map(x => f(serConf.value, x)).collect().toSeq
   }
 
   /** Footer stats for one file. Columns whose physical/logical type has no
@@ -827,21 +843,28 @@ object ZoneMaps {
 
   // ---------------------------------------------------------------- pruning
 
-  /** Resolve `filter` against the lake's real schema and return the
+  /** Resolve `filter` against the lake's real `schema` and return the
     * OPTIMIZED filter condition — literals cast-folded into the column's
     * type, implicit coercions applied, IsNotNull conjuncts inferred —
     * i.e. the exact semantics Spark will execute, which is the only thing
-    * pruning may reason from. One probe file's footer supplies the schema;
-    * planning is driver-only. None = no Filter survived optimization
-    * (e.g. a partition-only predicate) → no zone pruning.
+    * pruning may reason from. Planning is driver-only and reads no file:
+    * the filter sits over an empty RDD of the schema (an empty LOCAL
+    * relation would be optimized away with its filter). None = no Filter
+    * survived optimization → no zone pruning.
     */
-  private[sources] def resolvedPredicate(spark: SparkSession, basePath: String,
-      probeFile: String, filter: Column): Option[Expression] = {
-    val probe = spark.read.option("basePath", basePath).parquet(probeFile)
-    probe.where(filter).queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.reduceOption(And)
-  }
+  private[sources] def resolvedPredicate(spark: SparkSession, schema: StructType,
+      filter: Column): Option[Expression] =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .where(filter).queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.reduceOption(And)
+
+  /** The lake schema as a scan of `file` under `basePath` sees it: the
+    * file's footer plus the partition columns of its path.
+    */
+  private[sources] def probeSchema(spark: SparkSession, basePath: String,
+      file: String): StructType =
+    spark.read.option("basePath", basePath).parquet(file).schema
 
   /** True when `zones` PROVE no row of the file satisfies `pred` (a
     * RESOLVED, optimized condition from [[resolvedPredicate]]). False on
@@ -995,8 +1018,6 @@ object ZoneMaps {
     }
   }
 
-  // ------------------------------------------------------------ direct scan
-
   // ----------------------------------------------------------- bloom prune
 
   /** Equality constraints a bloom filter can test: (column, candidate
@@ -1027,131 +1048,186 @@ object ZoneMaps {
       case _ => Seq.empty
     }
 
-  /** Second-stage pruning for point predicates: consult the parquet BLOOM
-    * FILTERS of `files` (written via `parquet.bloom.filter.enabled#col`)
-    * for equality conjuncts. This is the case zone maps cannot help — a
-    * high-cardinality key spread uniformly across files has every file's
-    * [min,max] straddling every probe — and it reads only each file's
-    * footer + bloom bytes (a few KB–1 MB), never row groups. A file is
-    * pruned only when EVERY row group carries a bloom for the column and
-    * NO candidate value can be present. Missing blooms, unsupported
-    * physical types, and non-equality conjuncts keep the file.
+  /** Second-stage pruning for point predicates: test each file's per-row-
+    * group MEMBERSHIP structure for the equality conjuncts — the case zone
+    * maps cannot help, a high-cardinality key spread uniformly across files
+    * with every file's [min,max] straddling every probe. A row group answers
+    * through its parquet bloom filter (written via
+    * `parquet.bloom.filter.enabled#col`; may-contain), or, when it has none
+    * and its `EncodingStats` show only dictionary-encoded data pages,
+    * through its dictionary page (exact: parquet-java writes no bloom for
+    * such a chunk, which is every repeated-key chunk). A file is pruned only
+    * when EVERY row group answers and NO candidate value can be present;
+    * missing stats, plain-encoded chunks without a bloom, unsupported
+    * physical types and non-equality conjuncts keep the file. Structures
+    * are read once per (file, length, mtime, column) and cached
+    * ([[Members]]); each call stats every file to validate its entry.
     */
   def bloomPrune(conf: Configuration, files: Seq[String],
       pred: Expression): (Seq[String], Seq[String]) = {
     val constraints = equalityConstraints(pred)
-    if (constraints.isEmpty || files.isEmpty) return (files, Seq.empty)
-    val pool = Executors.newFixedThreadPool(math.min(files.size, 16))
-    try {
-      val futs = files.map { f =>
-        pool.submit(new Callable[(String, Boolean)] {
-          def call() = (f, bloomProvesEmpty(conf, f, constraints))
-        })
-      }
-      val res = futs.map(_.get())
-      (res.collect { case (f, false) => f }, res.collect { case (f, true) => f })
-    } finally {
-      pool.shutdownNow()
-      pool.awaitTermination(10, TimeUnit.SECONDS)
-    }
+    if (constraints.isEmpty || files.isEmpty) (files, Seq.empty)
+    else split(onProbePool(files)(f => (f, membershipProvesEmpty(conf, f, constraints))))
   }
 
   /** Cluster-scale [[bloomPrune]]: above `distributeOver` candidate files
-    * the footer+bloom probes run as a Spark job over the file list instead
-    * of the 16-thread driver pool — at ~10⁵ files the probe I/O is the
-    * bottleneck and it parallelizes embarrassingly (each file's verdict is
-    * independent; the driver receives one boolean per file). Below the
-    * threshold the driver pool wins (no job-scheduling floor). Identical
-    * verdicts by construction: both paths call [[bloomProvesEmpty]].
+    * the probes run as a Spark job over the file list instead of the
+    * driver [[probePool]] — at ~10⁵ files the probe I/O is the bottleneck
+    * and it parallelizes embarrassingly. Below the threshold the driver
+    * pool wins (no job-scheduling floor). Identical verdicts by
+    * construction: both paths call [[membershipProvesEmpty]].
     */
   def bloomPruneScaled(spark: SparkSession, files: Seq[String],
       pred: Expression, distributeOver: Int = 2048): (Seq[String], Seq[String]) = {
-    val conf = spark.sessionState.newHadoopConf()
-    if (files.size < distributeOver) return bloomPrune(conf, files, pred)
     val constraints = equalityConstraints(pred)
-    if (constraints.isEmpty) return (files, Seq.empty)
-    val serConf = new SerializableHadoopConf(conf)
-    val slices = math.min(files.size / 64 + 1,
-      math.max(spark.sparkContext.defaultParallelism * 4, 32))
-    val res = spark.sparkContext.parallelize(files, slices)
-      .map(f => (f, bloomProvesEmpty(serConf.value, f, constraints)))
-      .collect()
-    (res.collect { case (f, false) => f }.toSeq,
-      res.collect { case (f, true) => f }.toSeq)
+    if (files.size < distributeOver || constraints.isEmpty)
+      bloomPrune(spark.sessionState.newHadoopConf(), files, pred)
+    else split(onCluster(spark, files)((conf, f) =>
+      (f, membershipProvesEmpty(conf, f, constraints))))
+  }
+
+  /** (kept, pruned) from per-file "proves empty" verdicts. */
+  private def split(verdicts: Seq[(String, Boolean)]): (Seq[String], Seq[String]) = {
+    val (pruned, kept) = verdicts.partition(_._2)
+    (kept.map(_._1), pruned.map(_._1))
   }
 
   /** True when some constraint's every candidate value is absent from
-    * every row group's bloom for that column in `file`.
+    * every row group of that column in `file`. Conservative like every
+    * pruning stage: an unreadable footer/bloom/dictionary (transient store
+    * error, corrupt foreign file) keeps the file — one bad file must
+    * degrade that file's pruning, not abort the whole scan.
     */
-  private def bloomProvesEmpty(conf: Configuration, file: String,
-      constraints: Seq[(String, Seq[(Any, String)])]): Boolean =
-    // conservative like every pruning stage: an unreadable footer/bloom
-    // (transient store error, corrupt foreign file) keeps the file — one
-    // bad file must degrade that file's pruning, not abort the whole scan
-    try bloomProvesEmptyUnsafe(conf, file, constraints)
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  private def bloomProvesEmptyUnsafe(conf: Configuration, file: String,
+  private def membershipProvesEmpty(conf: Configuration, file: String,
       constraints: Seq[(String, Seq[(Any, String)])]): Boolean = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), conf))
+    var reader: ParquetFileReader = null
     try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      constraints.exists { case (colName, candidates) =>
-        // per-block: every candidate must be provably absent, and every
-        // block must carry a bloom — one bloomless row group keeps the file
-        blocks.nonEmpty && blocks.forall { b =>
-          val bloomReader = reader.getBloomFilterDataReader(b)
-          b.getColumns.asScala.find(_.getPath.toDotString == colName).exists { cmeta =>
-            val bloom = bloomReader.readBloomFilter(cmeta)
-            bloom != null && candidates.forall { case (v, t) =>
-              val hs = bloomHash(bloom, cmeta, v, t)
-              // empty = untestable value → might be present; a multi-hash
-              // candidate (signed zeros) is absent only when EVERY
-              // representation misses
-              hs.nonEmpty && hs.forall(h => !bloom.findHash(h))
-            }
-          }
-        }
+      val path = new HPath(file)
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      def open() = {
+        if (reader == null) reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        reader
       }
-    } finally reader.close()
+      constraints.exists { case (colName, candidates) =>
+        Members.of(st, colName)(loadMembers(open(), colName)).exists(_.provesAbsent(candidates))
+      }
+    } catch { case scala.util.control.NonFatal(_) => false }
+    finally if (reader != null) reader.close()
   }
 
-  /** All hashes under which a zone-domain value could live in the file
-    * column's physical representation; empty when the domains can't meet
-    * (then the value might still exist under some conversion we don't
-    * model — keep). Usually one hash; a zero-valued double yields BOTH
-    * sign patterns, because parquet blooms store exact bit patterns while
-    * Spark's `===` treats -0.0 and 0.0 as equal — probing only the
-    * literal's sign would wrongly prune files holding the other zero.
-    * Exception: a micros probe that doesn't divide into a MILLIS column
-    * is representable-nowhere, but that file-level proof belongs to
-    * min/max, not the bloom — we stay conservative here.
+  /** What one row group of one column can say about equality. */
+  private sealed trait RowGroupMembers { def bytes: Long; def mayContain(x: Any): Boolean }
+  private final case class BloomMembers(
+      b: BloomFilter) extends RowGroupMembers {
+    def bytes: Long = b.getBitsetSize + 64L
+    def mayContain(x: Any): Boolean = b.findHash(b.hash(x.asInstanceOf[AnyRef]))
+  }
+  private final case class DictMembers(values: Set[Any], bytes: Long) extends RowGroupMembers {
+    def mayContain(x: Any): Boolean = values.contains(x)
+  }
+  private case object NoMembers extends RowGroupMembers {
+    def bytes: Long = 0L
+    def mayContain(x: Any): Boolean = true
+  }
+
+  /** One column's membership structures in one file, one per row group. */
+  private final case class ColMembers(pt: PrimitiveType, groups: Seq[RowGroupMembers]) {
+    def bytes: Long = groups.map(_.bytes).sum + 128L
+    // empty forms = untestable value → might be present; a value with
+    // several physical forms (signed zeros) is absent only when EVERY form is
+    def provesAbsent(candidates: Seq[(Any, String)]): Boolean =
+      groups.nonEmpty && groups.forall(g => candidates.forall { case (v, t) =>
+        val forms = physical(pt, v, t)
+        forms.nonEmpty && !forms.exists(g.mayContain)
+      })
+  }
+
+  /** `colName`'s membership structures in an open file: None when the file
+    * lacks the column in some row group (then it is never pruned on it).
     */
-  private def bloomHash(bloom: org.apache.parquet.column.values.bloomfilter.BloomFilter,
-      cmeta: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
-      v: Any, t: String): Seq[Long] = {
-    val pt = cmeta.getPrimitiveType
+  private def loadMembers(reader: ParquetFileReader, colName: String): Option[ColMembers] = {
+    val blocks = reader.getFooter.getBlocks.asScala.toSeq
+    val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toDotString == colName))
+    if (blocks.isEmpty || chunks.size != blocks.size) return None
+    val desc = reader.getFileMetaData.getSchema.getColumnDescription(chunks.head.getPath.toArray)
+    Some(ColMembers(chunks.head.getPrimitiveType, blocks.zip(chunks).map { case (b, c) =>
+      Option(reader.getBloomFilterDataReader(b).readBloomFilter(c)).map(BloomMembers)
+        .orElse(Option(c.getEncodingStats)
+          .filter(es => es.hasDictionaryPages && !es.hasNonDictionaryEncodedPages)
+          .flatMap(_ => Option((reader.getDictionaryReader(b): DictionaryPageReadStore)
+            .readDictionaryPage(desc)))
+          .flatMap { page =>
+            val d = page.getEncoding.initDictionary(desc, page)
+            val ids = 0 to d.getMaxId
+            (c.getPrimitiveType.getPrimitiveTypeName match {
+              case INT32 => Some(ids.map(d.decodeToInt))
+              case INT64 => Some(ids.map(d.decodeToLong))
+              case DOUBLE => Some(ids.map(d.decodeToDouble))
+              case BINARY | FIXED_LEN_BYTE_ARRAY =>
+                Some(ids.map(i => Binary.fromConstantByteArray(d.decodeToBinary(i).getBytes)))
+              case _ => None
+            }).map(vs => DictMembers(vs.toSet, 64L * vs.size + page.getUncompressedSize))
+          })
+        .getOrElse(NoMembers)
+    }))
+  }
+
+  /** Per-file membership structures by (url, length, mtime, column): a pure
+    * cache, since a listed lake file never changes under its name and a
+    * rewritten one changes its length or mtime. LRU bounded in bytes by
+    * [[graft.operators.DriverBudget]]; hits and misses count under the
+    * `membership` tag of [[graft.operators.IndexMeta.hitsMisses]].
+    */
+  private object Members {
+    private val lru = new java.util.LinkedHashMap[String, Option[ColMembers]](64, 0.75f, true)
+    private var bytes = 0L
+    private def size(v: Option[ColMembers]) = v.fold(128L)(_.bytes)
+
+    def of(st: org.apache.hadoop.fs.FileStatus, col: String)(
+        load: => Option[ColMembers]): Option[ColMembers] = {
+      val key = s"${st.getPath}|${st.getLen}|${st.getModificationTime}|$col"
+      val hit = synchronized(Option(lru.get(key)))
+      graft.operators.IndexMeta.count("membership", hit.isDefined)
+      hit.getOrElse {
+        val v = load
+        synchronized {
+          Option(lru.put(key, v)).foreach(o => bytes -= size(o))
+          bytes += size(v)
+          val it = lru.values.iterator
+          while (bytes > graft.operators.DriverBudget.budgetBytes && it.hasNext) {
+            bytes -= size(it.next()); it.remove()
+          }
+        }
+        v
+      }
+    }
+  }
+
+  /** Every physical value under which a zone-domain value could be stored
+    * in a column of type `pt` — one helper for the bloom hash and the
+    * dictionary compare. Empty when the domains can't meet (then the value
+    * might still exist under some conversion we don't model — keep).
+    * Usually one form; a zero-valued double yields BOTH signs, because
+    * blooms and dictionaries store exact bit patterns while Spark's `===`
+    * treats -0.0 and 0.0 as equal. A micros probe that doesn't divide
+    * into a MILLIS column is representable nowhere, but that file-level
+    * proof belongs to min/max — we stay conservative here.
+    */
+  private def physical(pt: PrimitiveType, v: Any, t: String): Seq[Any] =
     (pt.getPrimitiveTypeName, v, t) match {
-      case (INT64, l: Long, "long") => Seq(bloom.hash(l))
+      case (INT64, l: Long, "long") => Seq(l)
       case (INT64, l: Long, "micros") =>
         pt.getLogicalTypeAnnotation match {
           case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-            Seq(bloom.hash(l))
+              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => Seq(l)
           case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
               if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS &&
-                l % 1000L == 0 =>
-            Seq(bloom.hash(l / 1000L))
+                l % 1000L == 0 => Seq(l / 1000L)
           case _ => Seq.empty
         }
-      case (INT32, l: Long, "long" | "days") if l >= Int.MinValue && l <= Int.MaxValue =>
-        Seq(bloom.hash(l.toInt))
-      case (DOUBLE, d: Double, "double") =>
-        if (d == 0.0) Seq(bloom.hash(0.0), bloom.hash(-0.0))
-        else Seq(bloom.hash(d))
-      case (BINARY, b: Array[Byte], "bytes") =>
-        Seq(bloom.hash(org.apache.parquet.io.api.Binary.fromConstantByteArray(b)))
+      case (INT32, l: Long, "long" | "days") if l.isValidInt => Seq(l.toInt)
+      case (DOUBLE, d: Double, "double") => if (d == 0.0) Seq(0.0, -0.0) else Seq(d)
+      case (BINARY, b: Array[Byte], "bytes") => Seq(Binary.fromConstantByteArray(b))
       // decimals: the probe carries the UNSCALED value tagged with its
       // scale; it maps onto the column's PHYSICAL representation only when
       // the scales agree (same refusal rule as the zone domains). Spark
@@ -1160,64 +1236,26 @@ object ZoneMaps {
       // the declared length). Variable-length BINARY decimals stay
       // unprobed: their byte length is writer-dependent, and a wrong
       // representation would wrongly prune.
-      case (INT32, bi: BigInt, t) if t.startsWith("dec") =>
-        decScale(pt) match {
-          case Some(s) if s"dec$s" == t && bi.isValidInt =>
-            Seq(bloom.hash(bi.toInt))
-          case _ => Seq.empty
-        }
-      case (INT64, bi: BigInt, t) if t.startsWith("dec") =>
-        decScale(pt) match {
-          case Some(s) if s"dec$s" == t && bi.isValidLong =>
-            Seq(bloom.hash(bi.toLong))
-          case _ => Seq.empty
-        }
-      case (FIXED_LEN_BYTE_ARRAY, bi: BigInt, t) if t.startsWith("dec") =>
-        decScale(pt) match {
-          case Some(s) if s"dec$s" == t =>
+      case (pn, bi: BigInt, t) if decScale(pt).exists(s => s"dec$s" == t) =>
+        pn match {
+          case INT32 if bi.isValidInt => Seq(bi.toInt)
+          case INT64 if bi.isValidLong => Seq(bi.toLong)
+          case FIXED_LEN_BYTE_ARRAY if bi.toByteArray.length <= pt.getTypeLength =>
             val len = pt.getTypeLength
             val raw = bi.toByteArray // minimal big-endian two's complement
-            if (raw.length > len) Seq.empty // unrepresentable → min/max's job
-            else {
-              val out = Array.fill[Byte](len)(
-                if (bi.signum < 0) 0xff.toByte else 0x00)
-              System.arraycopy(raw, 0, out, len - raw.length, raw.length)
-              Seq(bloom.hash(
-                org.apache.parquet.io.api.Binary.fromConstantByteArray(out)))
-            }
-          case _ => Seq.empty
+            val out = Array.fill[Byte](len)(if (bi.signum < 0) 0xff.toByte else 0x00)
+            System.arraycopy(raw, 0, out, len - raw.length, raw.length)
+            Seq(Binary.fromConstantByteArray(out))
+          case _ => Seq.empty // unrepresentable → min/max's job
         }
       case _ => Seq.empty
     }
-  }
 
   /** The scale of a decimal-annotated physical type, None otherwise. */
-  private def decScale(pt: org.apache.parquet.schema.PrimitiveType): Option[Int] =
+  private def decScale(pt: PrimitiveType): Option[Int] =
     pt.getLogicalTypeAnnotation match {
       case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => Some(d.getScale)
       case _ => None
-    }
-
-  /** Prune `files` under a resolved `pred`, keeping any file without a
-    * disproving zone. Returns (kept, pruned) — pruned only ever contains
-    * files whose stats PROVE emptiness under the predicate.
-    */
-  def prune(pred: Expression, zones: FileZones,
-      files: Seq[String]): (Seq[String], Seq[String]) =
-    files.partition(f => !zones.get(f).exists(z => provesEmpty(pred, z)))
-
-  /** Resolve `filter` against the lake schema, then prune: min/max zones
-    * always, parquet blooms for equality conjuncts when `blooms` is set
-    * (a footer+bloom read per surviving file — still no row-group I/O).
-    */
-  def pruneColumn(spark: SparkSession, basePath: String, filter: Column,
-      zones: FileZones, files: Seq[String], blooms: Boolean = false): Seq[String] =
-    resolvedPredicate(spark, basePath, files.head, filter) match {
-      case None => files
-      case Some(pred) =>
-        val (kept, _) = prune(pred, zones, files)
-        if (!blooms) kept
-        else bloomPruneScaled(spark, kept, pred)._1
     }
 
   /** Standalone zone-map scan of a plain parquet directory (no manifest):
@@ -1253,8 +1291,16 @@ object ZoneMaps {
       .map(p => fs.makeQualified(p).toString).sorted
     require(files.nonEmpty, s"no parquet files under $dir")
     val base = fs.makeQualified(root).toString
-    val zones = fromFooters(hconf, files)
-    (pruneColumn(spark, base, filter, zones, files, blooms), files, base)
+    // min/max zones always, the membership stage for equality conjuncts
+    // when `blooms` is set (still no row-group I/O)
+    val kept = resolvedPredicate(spark, probeSchema(spark, base, files.head), filter) match {
+      case None => files
+      case Some(pred) =>
+        val zones = fromFooters(hconf, files)
+        val zoneKept = files.filter(f => !zones.get(f).exists(z => provesEmpty(pred, z)))
+        if (!blooms) zoneKept else bloomPruneScaled(spark, zoneKept, pred)._1
+    }
+    (kept, files, base)
   }
 }
 

@@ -62,9 +62,12 @@ object Deliver {
       // file): the point-lookup complement to zone maps — an equality
       // probe on a high-cardinality key spread across files has every
       // file's [min,max] straddling it, but readWhere(blooms = true)
-      // disproves membership from the bloom bytes alone. Costs write CPU
-      // + a filter sized for the flush's row count at 1 % false positives
-      // (~1.2 bytes a row, capped at parquet.bloom.filter.max.bytes).
+      // disproves membership per row group. parquet-java writes the bloom
+      // only for a chunk with plain-encoded data pages (mostly-unique
+      // keys); a chunk that is all dictionary (repeated keys) gets none,
+      // and the reader tests its dictionary page instead (exact). Costs
+      // write CPU + a filter sized for the flush's row count at 1 % false
+      // positives (~1.2 bytes a row, capped at parquet.bloom.filter.max.bytes).
       bloomFilterCols: Seq[String] = Nil,
       // the maintenance-lock seam (the Compact/Erase/Retention argument):
       // the sink's opportunistic parquet-tier manifest self-fold takes

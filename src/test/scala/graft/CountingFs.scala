@@ -10,8 +10,9 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 
 /** The local filesystem with counters for the metadata calls a spec pins:
-  * creates, renames and mkdirs; listings of a `_staging` dir; and parquet
-  * opens outside any Spark task (footer reads on the driver). Installed on
+  * creates, renames and mkdirs; listings of a `_staging` dir; parquet
+  * opens outside any Spark task (footer reads on the driver); and opens of
+  * manifest files. Installed on
   * a session by [[CountingFs.counting]].
   */
 class CountingFs extends LocalFileSystem {
@@ -43,6 +44,7 @@ class CountingFs extends LocalFileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     if (f.getName.endsWith(".parquet") && TaskContext.get() == null)
       driverParquetOpens.incrementAndGet()
+    if (f.getName.startsWith("manifest-")) manifestOpens.incrementAndGet()
     super.open(f, bufferSize)
   }
   private def listed(f: Path): Unit =
@@ -50,11 +52,12 @@ class CountingFs extends LocalFileSystem {
 }
 
 object CountingFs {
-  private val creates, renames, mkdirsN, stageListings, driverParquetOpens = new AtomicLong
+  private val creates, renames, mkdirsN, stageListings, driverParquetOpens, manifestOpens =
+    new AtomicLong
   private val inCreate = ThreadLocal.withInitial[Boolean](() => false)
 
   final case class Counts(creates: Long, renames: Long, mkdirs: Long, stageListings: Long,
-      driverParquetOpens: Long)
+      driverParquetOpens: Long, manifestOpens: Long)
 
   /** Run `body` with `file:` paths resolved through this class on
     * `spark`'s Hadoop confs (uncached, so the session's own instances are
@@ -62,13 +65,14 @@ object CountingFs {
     * the counters are global.
     */
   def counting[T](spark: SparkSession)(body: => T): (T, Counts) = {
-    Seq(creates, renames, mkdirsN, stageListings, driverParquetOpens).foreach(_.set(0))
+    Seq(creates, renames, mkdirsN, stageListings, driverParquetOpens, manifestOpens)
+      .foreach(_.set(0))
     spark.conf.set("fs.file.impl", classOf[CountingFs].getName)
     spark.conf.set("fs.file.impl.disable.cache", "true")
     try {
       val r = body
       (r, Counts(creates.get, renames.get, mkdirsN.get, stageListings.get,
-        driverParquetOpens.get))
+        driverParquetOpens.get, manifestOpens.get))
     } finally {
       spark.conf.unset("fs.file.impl")
       spark.conf.unset("fs.file.impl.disable.cache")

@@ -285,6 +285,100 @@ class DeliverSpec extends SparkSuite {
       .count() == 1)
   }
 
+  /** Flushes into one hour folder, one file each. Flush `i` holds the
+    * seven ids `≡ i (mod 6)` below 42, each repeated many times (the Zipf
+    * shape of a real key), so every file's [min, max] straddles the ids
+    * 2–36, and those `≡ 3, 4, 5 (mod 6)` are in no file.
+    */
+  private def repeatedIdFlushes(base: String, flushes: Seq[Int]): Unit = {
+    val cfg = Deliver.Config(s"$base/lake", s"$base/ck", manifestDir = Some(s"$base/manifest"),
+      compact = true, partitionByProcessingTime = true,
+      zoneMapCols = Seq("id", "ts"), bloomFilterCols = Seq("id"), clock = clock)
+    val all = graft.queries.Registry.tbl(spark, sfDir, "events").limit(600)
+    flushes.foreach { i =>
+      val ev = all.where($"event_id" % 3 === i)
+        .withColumn("user_id", ($"event_id" % 7) * 6 + i)
+      Deliver.deliverBatch(Deliver.flatten(ShardedLog.fromEvents(ev), payloadSchema, cfg),
+        i.toLong, cfg)
+    }
+  }
+
+  test("repeated ids: no bloom is written, the dictionary prunes the files") {
+    val base = tmpDir("graft-dict-")
+    repeatedIdFlushes(base, Seq(0, 1, 2))
+    val mdir = s"$base/manifest"
+    val files = ManifestReader.latestManifestFiles(spark, mdir)
+    assert(files.size == 3)
+    // parquet-java writes no bloom for a chunk whose data pages are all
+    // dictionary-encoded: the case the membership stage must cover
+    val hconf = spark.sessionState.newHadoopConf()
+    files.foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), hconf))
+      try {
+        import scala.jdk.CollectionConverters._
+        r.getFooter.getBlocks.asScala.foreach { b =>
+          val c = b.getColumns.asScala.find(_.getPath.toDotString == "id").get
+          assert(r.getBloomFilterDataReader(b).readBloomFilter(c) == null, s"$f has an id bloom")
+          assert(!c.getEncodingStats.hasNonDictionaryEncodedPages, s"$f: ${c.getEncodingStats}")
+        }
+      } finally r.close()
+    }
+    val lake = ManifestReader.read(spark, mdir)
+    for (k <- Seq(12L, 13L, 14L, 15L)) {
+      val holding = files.count(f => spark.read.parquet(f).where($"id" === k).count() > 0)
+      assert(ManifestReader.pruneStats(spark, mdir, $"id" === k) == ((3, 3)))
+      assert(ManifestReader.pruneStats(spark, mdir, $"id" === k, blooms = true) ==
+        ((holding, 3)), s"id $k")
+      assert(ManifestReader.readWhere(spark, mdir, $"id" === k, blooms = true)
+        .select("sequence_number").as[String].collect().sorted.toSeq ==
+        lake.where($"id" === k).select("sequence_number").as[String].collect().sorted.toSeq)
+    }
+  }
+
+  test("an unchanged chain: readWhere runs one job, opens no manifest and no footer") {
+    val base = tmpDir("graft-warm-")
+    repeatedIdFlushes(base, Seq(0, 1))
+    val mdir = s"$base/manifest"
+    def lookup(k: Long) = ManifestReader.readWhere(spark, mdir, $"id" === k, blooms = true)
+      .select("sequence_number").as[String].collect().sorted.toSeq
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def drain() = org.apache.spark.graftbridge.ListenerBridge.flushListeners(spark.sparkContext)
+    import graft.operators.IndexMeta
+    val cold = lookup(12L)
+    assert(cold.nonEmpty)
+    val (mfHits, mfMisses) = IndexMeta.hitsMisses("mf-urls")
+    val (memHits, _) = IndexMeta.hitsMisses("membership")
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    val (warm, c) =
+      try CountingFs.counting(spark) {
+        val r = lookup(12L)
+        drain()
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(warm == cold)
+    assert(jobs.get == 1, "the scan is the only job")
+    assert(c.manifestOpens == 0, c)
+    assert(c.driverParquetOpens == 0, c)
+    assert(IndexMeta.hitsMisses("mf-urls") == ((mfHits + 1, mfMisses)))
+    // two files, both zone-kept: each membership lookup hits
+    assert(IndexMeta.hitsMisses("membership")._1 == memHits + 2)
+    // one more flush holding id 14: the next lookup sees it
+    assert(lookup(14L).isEmpty)
+    repeatedIdFlushes(base, Seq(2))
+    val fresh = lookup(14L)
+    assert(fresh.nonEmpty && fresh == ManifestReader.read(spark, mdir).where($"id" === 14L)
+      .select("sequence_number").as[String].collect().sorted.toSeq)
+    assert(IndexMeta.hitsMisses("mf-urls")._2 == mfMisses + 1)
+  }
+
   test("per-key ordering survives the shard layout (S2: same key ⇒ same shard)") {
     val recs = ShardedLog.fromEvents(events)
     val keyShards = recs.groupBy($"partition_key")

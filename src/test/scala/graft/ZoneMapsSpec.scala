@@ -261,6 +261,123 @@ class ZoneMapsSpec extends SparkSuite {
     assert(k3 == t3, s"mixed-scale decimal probe must keep every file: $k3/$t3")
   }
 
+  /** Bloom and dictionary facts of every `col` chunk in `file`: (has a
+    * bloom, has dictionary pages, has non-dictionary data pages).
+    */
+  private def chunkFacts(file: String, column: String): Seq[(Boolean, Boolean, Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), hconf))
+    try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+      val c = b.getColumns.asScala.find(_.getPath.toDotString == column).get
+      (r.getBloomFilterDataReader(b).readBloomFilter(c) != null,
+        c.getEncodingStats.hasDictionaryPages, c.getEncodingStats.hasNonDictionaryEncodedPages)
+    } finally r.close()
+  }
+
+  test("dictionary membership prunes repeated keys exactly when parquet wrote no bloom") {
+    // file j holds k ∈ {j, j+8, …, j+72}, each 20 times: every file's
+    // [min,max] straddles every probe, and the repeats make parquet
+    // dictionary-encode every chunk — so it drops the requested blooms
+    val epoch = java.time.LocalDate.of(2020, 1, 1)
+    def x(k: Long): Double = if (k == 16) -0.0 else k - 16.0
+    def dec(k: Long) = BigDecimal(k) + BigDecimal("0.25")
+    val decCols = Seq("p32" -> "decimal(9,2)", "p64" -> "decimal(12,2)", "pfx" -> "decimal(20,2)")
+    val cols = Seq("id", "i", "d", "s", "x") ++ decCols.map(_._1)
+    // v1 pages (the lake's) never dictionary-encode FIXED_LEN_BYTE_ARRAY, so
+    // v1's pfx chunks carry blooms; v2 pages dictionary-encode every column
+    for (version <- Seq("PARQUET_1_0", "PARQUET_2_0")) {
+      val dir = tmpDir("graft-zm-dict-")
+      (0 until 4).foreach { j =>
+        val ks = (0 until 10).map(i => j + 8L * i)
+        val rows = (1 to 20).flatMap(_ => ks).map(k => (k, k.toInt,
+          Date.valueOf(epoch.plusDays(k)), f"u$k%03d", x(k), dec(k)))
+        // file 3 also holds NaN doubles
+        val all = if (j == 3) rows ++ Seq.fill(5)(rows.head.copy(_5 = Double.NaN)) else rows
+        all.toDF("id", "i", "d", "s", "x", "p").select(col("*") +: decCols.map { case (c, t) =>
+            col("p").cast(t).as(c) }: _*).drop("p")
+          .coalesce(1).write.mode("overwrite").option("parquet.writer.version", version)
+          .options(cols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
+          .parquet(s"$dir/f$j")
+      }
+      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
+      val files = graft.streaming.FsOps.walkParquet(fs, new org.apache.hadoop.fs.Path(dir),
+        skipHidden = true).map(p => fs.makeQualified(p).toString)
+      def bloomed(c: String) = version == "PARQUET_1_0" && c == "pfx"
+      for (f <- files; c <- cols)
+        assert(chunkFacts(f, c).forall(_ ==
+          (if (bloomed(c)) (true, false, true) else (false, true, false))), s"$version $f $c")
+      def parity(pred: Column): Unit = {
+        val a = ZoneMaps.scanWhere(spark, dir, pred, blooms = true)
+          .select("id").as[Long].collect().sorted.toSeq
+        val b = spark.read.parquet((0 until 4).map(j => s"$dir/f$j"): _*).where(pred)
+          .select("id").as[Long].collect().sorted.toSeq
+        assert(a == b, s"$version: membership scan diverged under $pred")
+      }
+      def kept(pred: Column) = ZoneMaps.pruneStats(spark, dir, pred, blooms = true)
+      val probes = Seq[(String, Long => Column)](
+        ("id", k => lit(k)), ("i", k => lit(k.toInt)),
+        ("d", k => lit(Date.valueOf(epoch.plusDays(k)))), ("s", k => lit(f"u$k%03d")),
+        ("x", k => lit(x(k)))) ++
+        decCols.map { case (c, t) => c -> ((k: Long) => lit(dec(k).bigDecimal).cast(t)) }
+      for ((c, v) <- probes) {
+        // a dictionary is exact; a bloom may keep one false positive
+        def keeps(pred: Column, n: Int) = {
+          val (k, total) = kept(pred)
+          assert(total == 4 && k >= n && k <= (if (bloomed(c)) n + 1 else n),
+            s"$version $c: $pred kept $k, want $n")
+        }
+        // k = 17 lives in f1 only, k = 13 nowhere, k = 26 in f2 only
+        assert(ZoneMaps.pruneStats(spark, dir, col(c) === v(17))._1 == 4, s"$c zones straddle")
+        keeps(col(c) === v(17), 1)
+        keeps(col(c) === v(13), 0)
+        keeps(col(c).isin(v(17), v(26), v(13)), 2)
+        parity(col(c) === v(17)); parity(col(c) === v(13))
+        parity(col(c).isin(v(17), v(26), v(13)))
+      }
+      // ±0.0: f0 holds -0.0, which Spark's `===` equates with 0.0
+      assert(kept(col("x") === 0.0) == ((1, 4)) && kept(col("x") === -0.0) == ((1, 4)))
+      parity(col("x") === 0.0); parity(col("x") === -0.0)
+      // a NaN candidate is a real match (NaN = NaN): never pruned
+      assert(kept(col("x").isin(1.0, Double.NaN)) == ((4, 4)))
+      parity(col("x").isin(1.0, Double.NaN)); parity(col("x") === Double.NaN)
+    }
+  }
+
+  test("dictionary membership stays conservative: part-way fallback, plain chunks") {
+    val dir = tmpDir("graft-zm-dict-fallback-")
+    // f0: 3000 rows of ten repeated ids, then 3000 unique ones, with a 4 KB
+    // dictionary limit and 1 KB pages — the chunk starts dictionary-encoded
+    // and falls back to plain part-way, so parquet writes its bloom
+    val ids = (0 until 3000).map(i => (i % 10) * 1000L) ++ (0 until 3000).map(i => 1L + 3 * i)
+    ids.toDF("id").coalesce(1).write.mode("overwrite")
+      .option("parquet.bloom.filter.enabled#id", "true")
+      .option("parquet.dictionary.page.size", "4096").option("parquet.page.size", "1024")
+      .parquet(s"$dir/f0")
+    // f1: repeated ids, dictionary encoding off, no bloom
+    (0 until 3000).map(i => (i % 10) * 1000L + 2).toDF("id").coalesce(1).write
+      .mode("overwrite").option("parquet.enable.dictionary", "false").parquet(s"$dir/f1")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
+    def file(d: String) = graft.streaming.FsOps.walkParquet(fs,
+      new org.apache.hadoop.fs.Path(d), skipHidden = true).map(p => fs.makeQualified(p).toString).head
+    val f0 = chunkFacts(file(s"$dir/f0"), "id")
+    assert(f0.exists(f => f._2 && f._3) && f0.forall(_._1), s"f0 chunks: $f0")
+    assert(chunkFacts(file(s"$dir/f1"), "id").forall(_ == ((false, false, true))))
+    def scan(pred: Column) = ZoneMaps.scanWhere(spark, dir, pred, blooms = true)
+      .select("id").as[Long].collect().sorted.toSeq
+    def plain(pred: Column) = spark.read.parquet(s"$dir/f0", s"$dir/f1").where(pred)
+      .select("id").as[Long].collect().sorted.toSeq
+    // a dictionary-part key and a plain-part key of f0, and an f1 key
+    for (k <- Seq(3000L, 1L + 3 * 2500, 5002L)) {
+      assert(scan(col("id") === k) == plain(col("id") === k) && plain(col("id") === k).nonEmpty)
+    }
+    // an absent key inside both ranges: f1 has nothing to answer with
+    val (kept, total) = ZoneMaps.pruneStats(spark, dir, col("id") === 5001L, blooms = true)
+    assert(total == 2 && kept >= 1, s"the plain-encoded bloomless file must be kept: $kept")
+    assert(scan(col("id") === 5001L).isEmpty)
+  }
+
   test("nested struct-field predicates prune through dotted zone paths") {
     // the CDC envelope shape: payload.data.id range-clustered across files —
     // the harvest stores dotted leaf paths; the pruner must flatten the

@@ -211,32 +211,42 @@ class ZoneTierSpec extends SparkSuite {
   }
 
   test("distributed bloom probing: verdicts identical to the driver pool") {
-    val dir = tmpDir("graft-zt-dbloom-")
-    spark.range(0, 4000).toDF("id")
-      .withColumn("k", col("id") * 7)
-      .repartition(16, col("id"))
-      .write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#k", "true")
-      .parquet(dir)
-    val fs = new HPath(dir).getFileSystem(hconf)
-    val files = graft.streaming.FsOps.walkParquet(fs, new HPath(dir),
-      skipHidden = true).map(p => fs.makeQualified(p).toString)
-    // a present key and an absent one, as one IN constraint
-    val pred = {
-      val df = spark.read.parquet(dir)
-      df.where(col("k") === 7L * 1234L)
-        .queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }.reduce(org.apache.spark.sql.catalyst.expressions.And)
+    // unique keys: parquet falls back to plain encoding and writes blooms;
+    // repeated keys, each in one file: dictionary-only chunks, no bloom
+    for ((name, key, probe) <- Seq(("bloom", col("id") * 7, 7L * 1234L),
+        ("dict", (col("id") % 50) * 7, 7L * 34L))) {
+      val dir = tmpDir(s"graft-zt-d$name-")
+      spark.range(0, 4000).toDF("id")
+        .withColumn("k", key)
+        .repartition(16, col(if (name == "bloom") "id" else "k"))
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#k", "true")
+        .parquet(dir)
+      val fs = new HPath(dir).getFileSystem(hconf)
+      val files = graft.streaming.FsOps.walkParquet(fs, new HPath(dir),
+        skipHidden = true).map(p => fs.makeQualified(p).toString)
+      val pred = {
+        val df = spark.read.parquet(dir)
+        df.where(col("k") === probe)
+          .queryExecution.optimizedPlan.collect {
+            case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+          }.reduce(org.apache.spark.sql.catalyst.expressions.And)
+      }
+      val (kDriver, pDriver) = ZoneMaps.bloomPrune(hconf, files, pred)
+      // distributeOver = 1 forces the Spark-job path on the same file list
+      val (kDist, pDist) = ZoneMaps.bloomPruneScaled(spark, files, pred,
+        distributeOver = 1)
+      assert(kDist.sorted == kDriver.sorted && pDist.sorted == pDriver.sorted,
+        s"$name: distributed verdicts diverged: ${kDist.size}/${pDist.size} vs " +
+          s"${kDriver.size}/${pDriver.size}")
+      assert(pDriver.nonEmpty, s"$name: the probe should prune at least one file")
+      // the kept files are exactly those holding the key (dictionaries
+      // are exact; a bloom may keep a false positive)
+      val holding = files.filter(f =>
+        spark.read.parquet(f).where(col("k") === probe).count() > 0)
+      assert(holding.toSet.subsetOf(kDriver.toSet), name)
+      if (name == "dict") assert(kDriver.sorted == holding.sorted, name)
     }
-    val (kDriver, pDriver) = ZoneMaps.bloomPrune(hconf, files, pred)
-    // distributeOver = 1 forces the Spark-job path on the same file list
-    val (kDist, pDist) = ZoneMaps.bloomPruneScaled(spark, files, pred,
-      distributeOver = 1)
-    assert(kDist.sorted == kDriver.sorted && pDist.sorted == pDriver.sorted,
-      s"distributed bloom verdicts diverged: ${kDist.size}/${pDist.size} vs " +
-        s"${kDriver.size}/${pDriver.size}")
-    assert(pDriver.nonEmpty, "the probe should prune at least one bloomed file")
   }
 
   test("decimal zones: harvest, prune, and mixed-scale refusal") {
